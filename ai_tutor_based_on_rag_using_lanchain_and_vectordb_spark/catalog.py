@@ -28,9 +28,6 @@ from pyspark.sql import types as T
 
 from . import schemas
 
-TABLE_NAMES = tuple(schemas.DRIVER_TABLES)
-
-
 # Columns that MAY be stored as TIMESTAMP(NANOS) depending on the
 # writer; verified per-path against the parquet footer before the
 # long-read workaround is applied.
@@ -137,13 +134,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # nanosecond-epoch magnitudes (> 2^53)
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view (for spark.sql paths)."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

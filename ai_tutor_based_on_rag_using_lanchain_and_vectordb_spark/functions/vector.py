@@ -2,7 +2,7 @@
 
 Two tiers:
 
-- ``dot_fixed``/``norm_fixed``/``cosine_fixed`` — for a known dimension,
+- ``dot_fixed``/``norm_fixed``/``dot_const`` — for a known dimension,
   a *flat left-associated* sum of ``a[i]*b[i]`` terms. This stays inside
   WholeStageCodegen (plain arithmetic, zero per-row allocations), unlike
   the higher-order-function tier below which allocates intermediate
@@ -20,7 +20,6 @@ in ``operators/knn.py`` for matrix-batched scoring at cluster scale.
 from __future__ import annotations
 
 import math
-from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -35,8 +34,8 @@ def as_double(vec: Column) -> Column:
 
 
 def as_double_sql(vec_sql: str) -> str:
-    """SQL-text form of :func:`as_double` for the string-input fast
-    path below (same transform/CAST expression, parsed in one call)."""
+    """SQL-text form of :func:`as_double` for the SQL-string builders
+    below (same transform/CAST expression, parsed in one call)."""
     return f"transform({vec_sql}, x -> CAST(x AS DOUBLE))"
 
 
@@ -59,26 +58,24 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def quote_ident(name: str) -> str:
+    """Backtick-quote a top-level column name for SQL text (and for
+    ``F.col``), doubling any backtick inside it. A dot is part of the
+    name, not a struct-path separator: the vector operators take
+    top-level column names only."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # ------------------------------------------------------- fixed-dim (codegen)
 #
-# Each builder accepts its vector input either as a Column or as a SQL
-# expression STRING (a column name or any valid SQL array<...> expr).
-# The string form builds the whole flat expression as ONE SQL text and
-# parses it with a single F.expr() round trip; the Column form issues
-# one py4j call per element/multiply/add — ~4·dim socket round trips
-# per dot product, which at dim=64 made PLAN CONSTRUCTION (not
-# execution) the dominant cost of every vector query (measured r14:
-# semantic_bfs_production spent 3.7 s of a 5.4 s wall inside these
-# builders; guide §7.3 — planning time itself as the bottleneck). The
-# parsed tree is the same expression: element_at is 1-based in both,
-# `t1 + t2 + t3` parses LEFT-ASSOCIATED exactly like the reduce() fold,
-# and CAST/literal nodes match — so every score is bit-identical.
-
-
-def _elem(vec: Column, i: int, cast: bool) -> Column:
-    # element_at is 1-based
-    e = F.element_at(vec, i + 1)
-    return e.cast("double") if cast else e
+# Each builder takes its vector input as a SQL expression STRING (a
+# column name quoted with quote_ident, or any SQL array<...> expr) and
+# parses the whole flat expression with ONE F.expr() call. A Column-built
+# tree would cost ~4·dim py4j round trips per dot product, which at
+# dim=64 makes plan construction, not execution, the dominant cost of a
+# vector query. element_at is 1-based and `t1 + t2 + t3` parses
+# LEFT-ASSOCIATED, so the summation order is the sequential fold's and
+# every score is bit-identical to it (tests/test_vector_builders.py).
 
 
 def _elem_sql(vec_sql: str, i: int, cast: bool) -> str:
@@ -105,23 +102,17 @@ def dot_fixed_sql(a_sql: str, b_sql: str, dim: int = EMBEDDING_DIM,
     )
 
 
-def dot_fixed(a, b, dim: int = EMBEDDING_DIM, cast: bool = True) -> Column:
+def dot_fixed(a_sql: str, b_sql: str, dim: int = EMBEDDING_DIM,
+              cast: bool = True) -> Column:
     """Flat left-associated dot product. Pass ``cast=False`` when the
     arrays are already array<double> (pre-cast per row with
     ``as_double``) — halves the expression size, which matters both for
-    Janino compile time and per-pair evaluation. String inputs take the
-    one-parse fast path (see the tier note above)."""
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_fixed_sql(a, b, dim, cast))
-    terms = [_elem(a, i, cast) * _elem(b, i, cast) for i in range(dim)]
-    # left-associated chain == sequential-fold summation order
-    return reduce(lambda acc, t: acc + t, terms)
+    Janino compile time and per-pair evaluation."""
+    return F.expr(dot_fixed_sql(a_sql, b_sql, dim, cast))
 
 
-def norm_fixed(a, dim: int = EMBEDDING_DIM, cast: bool = True) -> Column:
-    if isinstance(a, str):
-        return F.expr(f"SQRT({dot_fixed_sql(a, a, dim, cast)})")
-    return F.sqrt(dot_fixed(a, a, dim, cast))
+def norm_fixed(a_sql: str, dim: int = EMBEDDING_DIM, cast: bool = True) -> Column:
+    return F.expr(f"SQRT({dot_fixed_sql(a_sql, a_sql, dim, cast)})")
 
 
 def dot_const_sql(vec_sql: str, consts, cast: bool = True) -> str:
@@ -132,22 +123,9 @@ def dot_const_sql(vec_sql: str, consts, cast: bool = True) -> str:
     )
 
 
-def dot_const(vec, consts, cast: bool = True) -> Column:
+def dot_const(vec_sql: str, consts, cast: bool = True) -> Column:
     """Flat dot product against a Python-side constant vector (e.g. a
-    centroid): every c_i folds into the codegen as a literal — no
-    array column, no HOF allocation. String input takes the one-parse
-    fast path (see the tier note above)."""
-    if isinstance(vec, str):
-        return F.expr(dot_const_sql(vec, consts, cast))
-    terms = [_elem(vec, i, cast) * F.lit(float(c)) for i, c in enumerate(consts)]
-    return reduce(lambda acc, t: acc + t, terms)
-
-
-def cosine_fixed(a, b, dim: int = EMBEDDING_DIM) -> Column:
-    return dot_fixed(a, b, dim) / (norm_fixed(a, dim) * norm_fixed(b, dim))
-
-
-def cosine_rounded(a: Column, b: Column, digits: int = 4) -> Column:
-    from .exact import pround
-
-    return pround(cosine(a, b), digits)
+    centroid): every c_i folds into the codegen as a DOUBLE literal — no
+    array column, no HOF allocation. Raises ``ValueError`` on a
+    non-finite constant."""
+    return F.expr(dot_const_sql(vec_sql, consts, cast))

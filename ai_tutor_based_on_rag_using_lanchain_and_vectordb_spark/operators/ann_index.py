@@ -26,6 +26,10 @@ assignment distance of incoming batches exceeds ``refit_drift`` × the
 mean at fit time, it flags a re-fit (the caller runs
 ``build_ivf_index`` again — cheap relative to the corpus scan it
 amortizes).
+
+The ``vec_col`` parameter names a top-level column, not a dotted
+struct path; the SQL builders quote it with
+``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -78,7 +82,7 @@ def build_ivf_index(
     # fit-time stats: corpus size and mean unit-sphere assignment
     # distance — the baselines the drift trigger compares against
     cells = [int(r[0]) for r in cent_rows]
-    _, dist = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    _, dist = _nearest_cell_expr(V.quote_ident(vec_col), centroids, cells, dim)
     agg = vectors.select(
         F.count("*").alias("n"), F.avg(dist).alias("mean_dist")
     ).collect()[0]
@@ -87,42 +91,29 @@ def build_ivf_index(
 
 
 def _nearest_cell_expr(
-    vec, centroids: np.ndarray, cells: list[int], dim: int
+    vec_sql: str, centroids: np.ndarray, cells: list[int], dim: int
 ) -> tuple[Column, Column]:
-    """(cell, unit-sphere distance) columns assigning a raw embedding to
-    its nearest centroid — pure codegen arithmetic, no MLlib model at
-    maintenance time. On unit vectors argmin ||u−c||² == argmin
-    (|c|²/2 − u·c), so each centroid contributes one flat literal dot.
-    Ties break on the lower cell id (array_min on struct(d, cell)).
-
-    ``vec`` may be a Column or a SQL expression string; the string form
-    builds the whole centroid argmin as ONE parsed expression (the
-    functions/vector.py fast path — at 64 dims × n_cells the per-node
-    Column form cost seconds of py4j round trips PER PLAN BUILD)."""
-    if isinstance(vec, str):
-        nrm_sql = f"SQRT({V.dot_fixed_sql(vec, vec, dim)})"
-        pair_sqls = []
-        for row_idx, cell in enumerate(cells):
-            c = np.asarray(centroids[row_idx], dtype=np.float64)
-            # same shape as the Column form: lit(|c|²/2) − dot/nrm
-            proxy = (
-                f"({V._dlit_sql(float(c @ c) / 2.0)} - "
-                f"({V.dot_const_sql(vec, c)}) / ({nrm_sql}))"
-            )
-            pair_sqls.append(f"struct({proxy} AS d, {int(cell)} AS cell)")
-        best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
-        nrm = F.expr(nrm_sql)
-        vec = F.expr(vec)
-    else:
-        nrm = V.norm_fixed(vec, dim)
-        pairs = []
-        for row_idx, cell in enumerate(cells):
-            c = np.asarray(centroids[row_idx], dtype=np.float64)
-            proxy = F.lit(float(c @ c) / 2.0) - V.dot_const(vec, c) / nrm
-            pairs.append(
-                F.struct(proxy.alias("d"), F.lit(int(cell)).alias("cell"))
-            )
-        best = F.array_min(F.array(*pairs))
+    """(cell, unit-sphere distance) columns assigning a raw embedding
+    (a SQL expression, e.g. ``V.quote_ident(vec_col)``) to its nearest
+    centroid — pure codegen arithmetic, no MLlib model at maintenance
+    time. On unit vectors argmin ||u−c||² == argmin (|c|²/2 − u·c), so
+    each centroid contributes one flat literal dot. Ties break on the
+    lower cell id (array_min on struct(d, cell)). The whole argmin is
+    ONE parsed expression (the functions/vector.py builders — at 64
+    dims × n_cells a per-node Column tree cost seconds of py4j round
+    trips PER PLAN BUILD)."""
+    nrm_sql = f"SQRT({V.dot_fixed_sql(vec_sql, vec_sql, dim)})"
+    pair_sqls = []
+    for row_idx, cell in enumerate(cells):
+        c = np.asarray(centroids[row_idx], dtype=np.float64)
+        proxy = (
+            f"({V._dlit_sql(float(c @ c) / 2.0)} - "
+            f"({V.dot_const_sql(vec_sql, c)}) / ({nrm_sql}))"
+        )
+        pair_sqls.append(f"struct({proxy} AS d, {int(cell)} AS cell)")
+    best = F.expr(f"array_min(array({', '.join(pair_sqls)}))")
+    nrm = F.expr(nrm_sql)
+    vec = F.expr(vec_sql)
     # A null or all-zero embedding has no unit direction: the division
     # yields NULL (Spark /0 → NULL), which would otherwise surface as a
     # NULL proxy inside the argmin struct. Make the no-cell case explicit
@@ -225,7 +216,9 @@ def upsert_ivf_index(
     cent_pdf = spark.read.parquet(os.path.join(path, "centroids")).toPandas()
     centroids = np.vstack(cent_pdf["centroid"].to_numpy())
     cells = [int(c) for c in cent_pdf["cell"].to_numpy()]
-    cell_col, dist_col = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    cell_col, dist_col = _nearest_cell_expr(
+        V.quote_ident(vec_col), centroids, cells, dim
+    )
 
     # metadata columns are whatever the layout's own schema carries
     # beyond (id, vec, cell) — declared once at build time, preserved
@@ -442,7 +435,7 @@ def search_ivf_index(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         V.as_double(F.col(vec_col)).alias("qv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("qnorm"),
+        V.norm_fixed(V.quote_ident(vec_col), dim).alias("qnorm"),
         *[F.col(c).alias(f"_q_{c}") for c in match_cols],
     )
     cand = (
@@ -450,7 +443,7 @@ def search_ivf_index(
             F.col(id_col).alias("neighbor_id"),
             V.as_double(F.col(vec_col)).alias("cv"),
             "cell",
-            V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+            V.norm_fixed(V.quote_ident(vec_col), dim).alias("cnorm"),
             *[F.col(c).alias(f"_c_{c}") for c in match_cols],
         )
         .join(probe_df, "cell")

@@ -62,25 +62,6 @@ def bm25_postings(docs: DataFrame, id_col: str = "doc_id",
     )
 
 
-def doc_lengths(docs: DataFrame, id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
-    """(doc_id, dl) WITHOUT building corpus-wide postings: dl = count of
-    non-empty whitespace tokens, a map-only codegen expression — row-
-    identical to ``bm25_postings(...).groupBy("doc_id").sum("tf")``
-    (docs with no tokens are absent from both, incl. NULL text where
-    ``size(null)`` is -1). The direct-search paths use this instead of
-    re-aggregating postings per consumer: the (doc, term) shuffle only
-    exists where an actual posting is needed (guide §2.3 — don't
-    shuffle what a scan can compute)."""
-    toks = tokens_col(F.col(text_col))
-    dl = F.size(F.filter(toks, lambda t: t != F.lit("")))
-    return (
-        docs.select(F.col(id_col).alias("doc_id"),
-                    dl.cast("long").alias("dl"))
-        .where(F.col("dl") > 0)
-    )
-
-
 def tokenized_base(docs: DataFrame, queries: list,
                    id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
@@ -234,7 +215,9 @@ def bm25_search(
     caller also consumes it — e.g. Q(retrieval_eval) derives its
     relevance truth from the same tokenization. ``postings`` (any
     (doc_id, term, tf) frame, e.g. the persistent layout's) keeps the
-    former semi-filter shape for callers that already hold postings."""
+    former semi-filter shape for callers that already hold postings.
+    When ``postings`` is supplied, ``docs``, ``id_col``, ``text_col``
+    and ``base`` are unused: lengths and stats come from the postings."""
     qdf = _query_terms_df(spark, queries)
     if postings is not None:
         # caller-pinned postings (shared with other consumers): the
@@ -295,7 +278,9 @@ def bm25_prf_search(
     on the (derived, tiny) expanded term broadcast before the
     (doc, term) aggregation. Nothing doc-length-joins — dl rides the
     matched rows. Passing ``postings`` keeps the old
-    semi-filter-the-pinned-frame shape for callers that share one."""
+    semi-filter-the-pinned-frame shape for callers that share one; then
+    ``docs``, ``id_col`` and ``text_col`` are unused (the feedback
+    harvest reads the postings too)."""
     from pyspark.sql import Window
 
     qdf = _query_terms_df(spark, queries)

@@ -72,29 +72,3 @@ def embed_documents(
         F.col(id_col),
         hashing_embedding(F.col(text_col), dim).alias("embedding"),
     )
-
-
-def tfidf_embedding_model(docs: DataFrame, text_col: str = "text", dim: int = 256):
-    """MLlib HashingTF+IDF pipeline; returns (fitted PipelineModel,
-    transform helper adding an `embedding` array<float> column)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import IDF, HashingTF, Tokenizer
-    from pyspark.ml.functions import vector_to_array
-
-    pipe = Pipeline(
-        stages=[
-            Tokenizer(inputCol=text_col, outputCol="_toks"),
-            HashingTF(inputCol="_toks", outputCol="_tf", numFeatures=dim),
-            IDF(inputCol="_tf", outputCol="_tfidf"),
-        ]
-    )
-    model = pipe.fit(docs)
-
-    def transform(df: DataFrame) -> DataFrame:
-        out = model.transform(df)
-        return out.withColumn(
-            "embedding",
-            F.transform(vector_to_array("_tfidf"), lambda x: x.cast("float")),
-        ).drop("_toks", "_tf", "_tfidf")
-
-    return model, transform

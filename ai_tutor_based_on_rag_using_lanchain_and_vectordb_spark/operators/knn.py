@@ -16,6 +16,10 @@ Three physical strategies, trading exactness for scale:
 
 Plus ``lsh_similarity_join`` via MLlib BucketedRandomProjectionLSH on
 unit-normalized vectors (Euclidean distance on unit sphere ⇔ cosine).
+
+Vector-column parameters (``vec_col``, ``query_vec_col``) name
+top-level columns, not dotted struct paths; the SQL builders quote
+them with ``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -52,15 +56,16 @@ def knn_exact_expr(
     exclude_self: bool = True,
 ) -> DataFrame:
     """Strategy 1: broadcast nested-loop + codegen cosine + window top-k."""
+    qvec, cvec = V.quote_ident(query_vec_col), V.quote_ident(vec_col)
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
-        F.col(query_vec_col).alias("qv"),
-        V.norm_fixed(f"`{query_vec_col}`", dim).alias("qnorm"),
+        F.col(qvec).alias("qv"),
+        V.norm_fixed(qvec, dim).alias("qnorm"),
     ).where(F.col("qnorm") > 0)  # zero-norm excluded: cosine undefined
     c = vectors.select(
         F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        F.col(cvec).alias("cv"),
+        V.norm_fixed(cvec, dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = F.lit(True) if not exclude_self else F.col("query_id") != F.col("neighbor_id")
     scored = c.join(F.broadcast(q), cond).withColumn(
@@ -225,14 +230,14 @@ def knn_ivf(
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("qnorm"),
+        V.norm_fixed(V.quote_ident(vec_col), dim).alias("qnorm"),
     )
     cand = (
         assigned.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("cv"),
             F.col("cell"),
-            V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+            V.norm_fixed(V.quote_ident(vec_col), dim).alias("cnorm"),
         )
         .join(probe_df, "cell")  # restrict to probed cells per query
         .join(F.broadcast(q), "query_id")

@@ -38,6 +38,10 @@ bit-identical between Spark and the DuckDB recursive-CTE oracle
 (plans/vectors.py knn_mmr_rerank, which joins on global ids directly
 and needs no packing). Tie-breaks use the GLOBAL neighbor id on both
 sides, so local re-indexing never changes the selection.
+
+Vector-column parameters (``vec_col``, ``query_vec_col``) name
+top-level columns, not dotted struct paths; the SQL builders quote
+them with ``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -122,12 +126,12 @@ def mmr_rerank(
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         V.as_double(F.col(query_vec_col)).alias("qv"),
-        V.norm_fixed(f"`{query_vec_col}`", dim).alias("qnorm"),
+        V.norm_fixed(V.quote_ident(query_vec_col), dim).alias("qnorm"),
     ).where(F.col("qnorm") > 0)
     c = vectors.select(
         F.col(id_col).alias("nid"),
         V.as_double(F.col(vec_col)).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        V.norm_fixed(V.quote_ident(vec_col), dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     cond = (
         F.col("query_id") != F.col("nid") if exclude_self else F.lit(True)
@@ -176,7 +180,7 @@ def mmr_rerank_candidates(
     vecs = vectors.select(
         F.col(id_col).alias("nid"),
         V.as_double(F.col(vec_col)).alias("cv"),
-        V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+        V.norm_fixed(V.quote_ident(vec_col), dim).alias("cnorm"),
     ).where(F.col("cnorm") > 0)
     scored = cand.join(vecs.hint("shuffle_hash"), "nid").select(
         "query_id", "nid", "score", "cv", "cnorm"

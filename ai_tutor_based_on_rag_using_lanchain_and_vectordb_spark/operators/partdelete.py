@@ -23,9 +23,7 @@ Scale shape (the GDPR-purge / re-crawl-replace cadence at 100 TB):
   contract as the upsert path's emptied-cell handling).
 
 Deletes are idempotent by construction (deleting an absent id touches
-nothing), which is what makes the streaming delete wrapper
-(streaming/index_deletes.py) exactly-once under foreachBatch's
-at-least-once redelivery with just an epoch marker.
+nothing), so replaying a delete batch on its own is a no-op.
 """
 
 from __future__ import annotations

@@ -23,6 +23,10 @@ Scale shape (100 TB design point):
   vectors (hash join on id) — touching D floats for only
   shortlist·|queries| rows. ADC-shortlist → exact-rerank is the
   standard production arrangement.
+
+The ``vec_col`` parameter names a top-level column, not a dotted
+struct path; the SQL builders quote it with
+``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -312,7 +316,7 @@ def _exact_rerank(
             rerank_vectors.select(
                 F.col(id_col).alias("neighbor_id"),
                 F.col(vec_col).alias("cv"),
-                V.norm_fixed(f"`{vec_col}`", dim).alias("cnorm"),
+                V.norm_fixed(V.quote_ident(vec_col), dim).alias("cnorm"),
             ),
             "neighbor_id",
         )

@@ -10,6 +10,10 @@ caller's raw-vector table.
 Build cost is paid once; searches never re-fit or re-encode — the
 difference between this and pq.knn_ivfpq (which fits inline and exists
 for gates/one-shot use).
+
+The ``vec_col`` parameter names a top-level column, not a dotted
+struct path; the SQL builders quote it with
+``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -20,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import vector as V
 from . import knn as KNN
 from .knn import fit_ivf_centroids, unit_vectors_ml
 from .pq import (
@@ -285,7 +290,7 @@ def upsert_ivfpq_index(
     cb = read_codebooks(spark, path)
     dim = cb.shape[0] * cb.shape[2]
 
-    cell_col, _dist = _nearest_cell_expr(f"`{vec_col}`", centroids, cells, dim)
+    cell_col, _dist = _nearest_cell_expr(V.quote_ident(vec_col), centroids, cells, dim)
     # preserve whatever metadata the layout carries (declared at build
     # time via meta_cols; the batch must supply the same columns)
     codes_path = os.path.join(path, "codes")

@@ -36,6 +36,10 @@ equal meaning).
 Zero-norm / NULL embeddings have no cosine direction and are OUTSIDE
 the operator's domain (same contract as every cosine path in this
 repo): they appear in neither the kept nor the pruned set.
+
+The ``vec_col`` parameter names a top-level column, not a dotted
+struct path; the SQL builders quote it with
+``functions.vector.quote_ident``.
 """
 
 from __future__ import annotations
@@ -70,7 +74,7 @@ def assign_cells(
     from .knn import fit_ivf_centroids
 
     base = vectors.select(id_col, vec_col).where(
-        F.col(vec_col).isNotNull() & (V.norm_fixed(f"`{vec_col}`", dim) > 0)
+        F.col(vec_col).isNotNull() & (V.norm_fixed(V.quote_ident(vec_col), dim) > 0)
     )
     if n_cells == 1 and centroids is None:
         # no quantizer needed: one cell, distance measured to the mean
@@ -87,7 +91,7 @@ def assign_cells(
     if len(centroids) > _EXPR_ASSIGN_MAX_CELLS:
         return _assign_cells_numpy(base, centroids, id_col, vec_col)
     cell_col, dist_col = _nearest_cell_expr(
-        f"`{vec_col}`", centroids, list(range(len(centroids))), dim
+        V.quote_ident(vec_col), centroids, list(range(len(centroids))), dim
     )
     return base.select(
         id_col, vec_col, cell_col.alias("cell"), dist_col.alias("centroid_dist")
@@ -170,7 +174,9 @@ def _mean_direction_dist(
         .collect()
     )  # bounded: one row per embedding dimension
     centroid = np.asarray([r["m"] for r in sums], dtype=np.float64)
-    _, dist_col = _nearest_cell_expr(f"`{vec_col}`", centroid[None, :], [0], dim)
+    _, dist_col = _nearest_cell_expr(
+        V.quote_ident(vec_col), centroid[None, :], [0], dim
+    )
     return vectors.withColumn("centroid_dist", dist_col)
 
 

@@ -1183,7 +1183,7 @@ def quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     HLL rollup: one fixed-bin histogram row set per day (additive
     (day, bin, n) longs, so ANY date range's quantiles come from
     group-summing bins — no raw re-scan, and a stream maintains it
-    with plain additive upserts via the rollup.py machinery). The
+    with plain additive upserts). The
     median estimate linearly interpolates inside the covering bin.
     The provable bound is against the DISCRETE median (the smallest
     data value whose CDF ≥ 0.5 — it always lies in the covering bin,

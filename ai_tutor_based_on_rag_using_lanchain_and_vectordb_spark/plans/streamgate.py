@@ -1,6 +1,6 @@
 """Driver-visible self-check for the STREAMING surface (SURVEY §2.8,
 ST1-ST5): the pytest suite proves stream ≡ batch per operator
-(tests/test_streaming.py, test_stream_dedup.py, test_sinks.py), but
+(tests/test_streaming.py, test_stream_dedup.py), but
 the driver's correctness gate never sees those runs. This gate runs
 each streaming operator as a real availableNow Structured Streaming
 query over the events fixture INSIDE the query, compares it to the

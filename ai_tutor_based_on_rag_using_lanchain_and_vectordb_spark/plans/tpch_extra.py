@@ -423,8 +423,8 @@ def exact_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lineitem_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew report for lineitem.l_orderkey — the diagnostic a
-    100 TB engine runs BEFORE picking a join strategy (operators/
-    skew.py salts what this report flags): key count, row count, the
+    100 TB engine runs BEFORE picking a join strategy (salting the
+    keys this report flags is the usual fix): key count, row count, the
     hottest key and its share, and the p50/p99 key-frequency ratio.
     The frequency table is one groupBy; its quantiles come from the
     exact selection operator (bounded driver values); the top key is a
@@ -793,7 +793,7 @@ def orders_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     all per-column aggregates ride a single groupBy-less agg (Spark's
     multi-distinct Expand), then unpivot to one row per column. Exact
     NDV is the oracle-able spec; at 100 TB the same query swaps in the
-    HLL sketch family (operators/rollup.py) — documented trade, same
+    HLL sketch family (Q(hll_rollup_gate)) — documented trade, same
     output shape."""
     orders = load_table(spark, sf_dir, "orders").withColumn(
         "o_orderdate_us", F.unix_micros("o_orderdate")

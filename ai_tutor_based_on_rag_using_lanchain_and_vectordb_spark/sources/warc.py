@@ -28,8 +28,7 @@ ingestion path Spark-first:
   record bodies with a seek-past instead of decoding them.
 - ``wet_documents`` — the WET → canonical document-schema adapter
   (doc_id parsed from the target URI) that lands web text on the same
-  schema the rest of the pipeline (splitter → embed → index) consumes,
-  mirroring textformats.read_jsonl_documents.
+  schema the rest of the pipeline (splitter → embed → index) consumes.
 
 HTTP ``response`` records additionally split the stored HTTP message:
 status line parsed to ``http_status``, entity headers to
@@ -312,8 +311,7 @@ class WarcReader(DataSourceReader):
         """Consume record_type equality/IN filters — matching records
         decode, everything else is seeked past by Content-Length
         (framing read, no row build, no HTTP split, no text decode).
-        Multiple consumed predicates intersect, same contract as
-        pyds.CorpusDirReader.pushFilters."""
+        Multiple consumed predicates intersect."""
         for f in filters:
             if isinstance(f, EqualTo) and f.attribute == ("record_type",):
                 got = {f.value}
@@ -439,7 +437,7 @@ def write_warc_shards(
 
 def wet_documents(spark, path: str, with_uri: bool = False):
     """WET conversion records → the canonical document frame
-    (textformats.DOCUMENT_SCHEMA shape): doc_id parsed from the target
+    (the documents table's shape): doc_id parsed from the target
     URI, language from the identified-content-language field the
     re-sharder writes. The record_type filter pushes into the scan and
     seeks past non-conversion records. ``with_uri`` appends the raw

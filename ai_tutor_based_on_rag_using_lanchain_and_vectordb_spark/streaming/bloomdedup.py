@@ -11,15 +11,15 @@ into the bitmap — so the sketch IS the accumulated corpus summary, a
 few MB standing in for the 100 TB of history at probe time.
 
 Exactly-once under foreachBatch's at-least-once redelivery, with
-VERSIONED state (stronger than the rollup's marker-only scheme,
+VERSIONED state (stronger than a marker-only scheme,
 because a replayed batch must probe the PRE-batch sketch or every
 replayed row would look like a duplicate):
 
 - state lives in ``state/sketch_epoch=N`` + ``state/keys_epoch=N``
   directories; a marker file names the last COMMITTED epoch;
 - a batch probes the sketch named by the marker, sinks its novel rows
-  (caller's sink must be idempotent per epoch — sinks.append_epoch
-  is the intended pairing), writes the NEXT versions, then moves the
+  (caller's sink must be idempotent per epoch, e.g. an overwrite of
+  a per-epoch subdirectory), writes the NEXT versions, then moves the
   marker; a crash anywhere before the marker move replays against
   unchanged state and regenerates byte-identical outputs;
 - an epoch at-or-below the marker is skipped outright.

@@ -264,98 +264,6 @@ def test_ivfpq_delete_equals_fresh_build(spark, sf_dir, tmp_path):
     assert delete_ivfpq_ids(spark, path, victims)["deleted"] == 0
 
 
-# ------------------------------------------------- streaming deletes
-
-
-def test_stream_deletes_exactly_once(spark, sf_dir, tmp_path):
-    """The marker scheme, driven directly through DeleteStreamState
-    (the foreachBatch body): a replayed COMPLETED epoch is skipped —
-    which matters because a delete replayed AFTER the doc was
-    re-added would wrongly kill the re-added copy."""
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.streaming.index_deletes import (
-        DeleteStreamState,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    path = str(tmp_path / "bm25_sd")
-    build_bm25_index(docs, path, n_buckets=4)
-
-    state = DeleteStreamState(
-        str(tmp_path / "del_state"),
-        [lambda s, ids: delete_bm25_docs(s, path, ids)],
-    )
-    b0 = spark.createDataFrame([(0,), (1,)], "doc_id long")
-    b1 = spark.createDataFrame([(2,)], "doc_id long")
-
-    assert state.apply_batch(b0, 0) is True
-    assert state.apply_batch(b1, 1) is True
-    doclens = spark.read.parquet(os.path.join(path, "doclens"))
-    assert doclens.where("doc_id IN (0, 1, 2)").count() == 0
-
-    # docs 0 and 1 get re-added (re-crawl) AFTER their delete epoch
-    upsert_bm25_index(
-        spark, path, docs.where("doc_id IN (0, 1)"), mode="replace"
-    )
-    assert spark.read.parquet(os.path.join(path, "doclens")).where(
-        "doc_id IN (0, 1)"
-    ).count() == 2
-
-    # the redelivered (completed) epoch 0 must be SKIPPED — otherwise
-    # it would re-delete the re-added docs
-    assert state.apply_batch(b0, 0) is False
-    assert spark.read.parquet(os.path.join(path, "doclens")).where(
-        "doc_id IN (0, 1)"
-    ).count() == 2
-
-    # end state equals a fresh build over the corpus minus doc 2
-    fresh_path = str(tmp_path / "bm25_sd_fresh")
-    build_bm25_index(docs.where("doc_id != 2"), fresh_path, n_buckets=4)
-    got = _rows(Bm25Searcher(spark, path).search(QUERIES, k=5))
-    want = _rows(Bm25Searcher(spark, fresh_path).search(QUERIES, k=5))
-    assert got == want
-
-
-def test_stream_deletes_end_to_end(spark, sf_dir, tmp_path):
-    """Full Structured Streaming drive of stream_index_deletes over a
-    rate-limited file source feeding TWO layouts at once (the
-    reference's remove-from-both-stores contract)."""
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.streaming.index_deletes import (
-        stream_index_deletes,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    emb = load_table(spark, sf_dir, "embeddings")
-    bm25_path = str(tmp_path / "bm25_e2e")
-    ivf_path = str(tmp_path / "ivf_e2e")
-    build_bm25_index(docs, bm25_path, n_buckets=4)
-    build_ivf_index(emb, ivf_path, n_cells=4)
-
-    req_dir = str(tmp_path / "reqs")
-    victims = [0, 1, 2, 3]
-    spark.createDataFrame(
-        [(v,) for v in victims], "doc_id long"
-    ).coalesce(1).write.parquet(req_dir)
-    stream = spark.readStream.schema("doc_id long").parquet(req_dir)
-
-    q = stream_index_deletes(
-        stream,
-        str(tmp_path / "e2e_state"),
-        str(tmp_path / "e2e_ckpt"),
-        [
-            lambda s, ids: delete_bm25_docs(s, bm25_path, ids),
-            lambda s, ids: delete_ivf_ids(s, ivf_path, ids),
-        ],
-    )
-    q.awaitTermination(120)
-
-    assert spark.read.parquet(os.path.join(bm25_path, "doclens")).where(
-        F.col("doc_id").isin(victims)
-    ).count() == 0
-    assert spark.read.parquet(os.path.join(ivf_path, "vectors")).where(
-        F.col("vec_id").isin(victims)
-    ).count() == 0
-
-
 def test_purge_document_gate_all_pass(spark, sf_dir):
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.plans.pipeline import (
         purge_document_gate,

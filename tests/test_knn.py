@@ -66,3 +66,19 @@ def test_knn_ivf_recall_gate_passes(spark, sf_dir):
     row = knn_ivf_recall(spark, sf_dir).first()
     assert row["passed"] is True, row.asDict()
     assert row["n_queries"] == 5
+
+
+def test_exact_accepts_vector_column_names_with_backticks_and_dots(spark, sf_dir):
+    """Vector columns are top-level names: a backtick or a dot inside
+    one is part of the name, quoted by functions.vector.quote_ident."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    want = _exact(spark, sf_dir, k=5)
+    for name in ("e`mb", "e.mb`"):
+        renamed = emb.withColumnRenamed("embedding", name)
+        got = KNN.knn_exact_expr(
+            renamed, renamed.where(F.col("vec_id") < 5), k=5,
+            vec_col=name, query_vec_col=name,
+        ).toPandas()
+        assert got.sort_values(["query_id", "rank"]).to_numpy().tolist() == (
+            want.sort_values(["query_id", "rank"]).to_numpy().tolist()
+        )

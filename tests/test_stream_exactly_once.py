@@ -4,13 +4,11 @@ offset commit still be lost), so each maintainer must tolerate a
 replayed COMPLETED batch with bit-identical final state.
 
 Maintainers and their mechanism:
-- HLL rollup            epoch marker (tests/test_rollup.py)
 - streaming heavy hitters  last_epoch skip (tests/test_stream_freq.py)
 - IVF index stream      replace-by-id upsert (naturally idempotent)
 - IVF+PQ index stream   replace-by-id upsert (naturally idempotent)
 - BM25 index stream     doclens-membership anti-join (skip existing)
 - incremental components  replayed edges condense to self-loops
-- append landing zone   per-epoch overwrite subtree (sinks.append_epoch)
 """
 
 from __future__ import annotations
@@ -115,45 +113,6 @@ def test_incremental_components_replay_is_idempotent(spark):
     inc.update(b2)
     labels2 = sorted((r.node, r.label) for r in inc.labels().collect())
     assert labels1 == labels2
-
-
-def test_append_epoch_replay_is_idempotent(spark, sf_dir, tmp_path):
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import sinks
-
-    events = load_table(spark, sf_dir, "events").limit(200).localCheckpoint(
-        eager=True
-    )
-    out = str(tmp_path / "land")
-    sinks.append_epoch(events, out, 0)
-    first = sorted(
-        (r.event_id, r.ingest_epoch) for r in spark.read.parquet(out).collect()
-    )
-    assert len(first) == 200
-    # replay epoch 0 (completed batch, lost commit): same subtree is
-    # overwritten, not appended
-    sinks.append_epoch(events, out, 0)
-    again = sorted(
-        (r.event_id, r.ingest_epoch) for r in spark.read.parquet(out).collect()
-    )
-    assert again == first
-    # a genuinely new epoch lands additively
-    sinks.append_epoch(events, out, 1)
-    assert spark.read.parquet(out).count() == 400
-
-
-def test_append_stream_end_to_end_still_lands_all_rows(spark, sf_dir, tmp_path):
-    from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources import sinks
-    from tests.test_streaming import _stream_events
-
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    q = sinks.append_stream_foreachbatch(_stream_events(spark, sf_dir), out, ckpt)
-    q.awaitTermination(120)
-    written = spark.read.parquet(out)
-    assert written.count() == load_table(spark, sf_dir, "events").count()
-    assert "ingest_epoch" in written.columns
-    # date pruning still works above the epoch layer
-    assert "event_date" in written.columns
 
 
 def test_semdedup_state_replay_is_idempotent(spark, sf_dir, tmp_path):
