@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..streaming import start_foreach_batch
 from .knn import fit_ivf_centroids, unit_vectors_ml
 
 
@@ -347,7 +348,6 @@ def stream_ivf_index(
     dim: int = V.EMBEDDING_DIM,
     auto_refit: bool = False,
     n_cells: int = 16,
-    available_now: bool = True,
 ):
     """ST5-style continuous index maintenance: every micro-batch runs the
     partition-scoped upsert; with ``auto_refit`` the centroid re-fit
@@ -365,12 +365,7 @@ def stream_ivf_index(
                 id_col=id_col, vec_col=vec_col, dim=dim,
             )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)
 
 
 def search_ivf_index(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .components import MAX_DRIVER_EDGES
+from .components import MAX_DRIVER_EDGES, round_pin
 
 
 def _driver_bfs(spark, sym: DataFrame, dist0: DataFrame,
@@ -91,16 +91,7 @@ def bfs_hops(
     see the module docstring.
     """
     spark = edges.sparkSession
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
+    _pin = round_pin(spark, checkpoint_dir)
 
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a") != F.col("b")

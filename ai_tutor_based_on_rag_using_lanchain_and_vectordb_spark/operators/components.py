@@ -48,6 +48,16 @@ from pyspark.sql import functions as F
 MAX_DRIVER_EDGES = 200_000
 
 
+def round_pin(spark, checkpoint_dir: str | None):
+    """The lazy per-round pin of the iterative graph operators: reliable
+    ``checkpoint()`` into ``checkpoint_dir`` when set (survives executor
+    loss), else executor-local ``localCheckpoint``."""
+    if checkpoint_dir is not None:
+        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+        return lambda df: df.checkpoint(eager=False)
+    return lambda df: df.localCheckpoint(eager=False)
+
+
 def _driver_components(spark, sym: DataFrame) -> DataFrame:
     """Union-find over a collected (bounded, see gate) edge list; same
     contract as the distributed path: component = min reachable id."""
@@ -101,17 +111,7 @@ def connected_components(
     where executor loss means the whole app died anyway.
     """
     spark = edges.sparkSession
-
-    if checkpoint_dir is not None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=False)
-
-    else:
-
-        def _pin(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=False)
+    _pin = round_pin(spark, checkpoint_dir)
 
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Pin the edge list once: without this every iteration re-derives

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vector as V
+from ..streaming import start_foreach_batch
 from . import knn as KNN
 from .knn import fit_ivf_centroids, unit_vectors_ml
 from .pq import (
@@ -386,7 +387,6 @@ def stream_ivfpq_index(
     checkpoint: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Continuous maintenance of the codes layout: every micro-batch
     runs the frozen-quantizer upsert (same foreachBatch shape as
@@ -398,9 +398,4 @@ def stream_ivfpq_index(
             id_col=id_col, vec_col=vec_col,
         )
 
-    writer = stream_df.writeStream.foreachBatch(_merge).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)

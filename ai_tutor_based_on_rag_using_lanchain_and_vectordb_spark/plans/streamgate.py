@@ -13,29 +13,51 @@ Modeled on plans/pipeline.multimodal_gate (the media analog).
 from __future__ import annotations
 
 import os
+import tempfile
 import uuid
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import _read_schema, ensure_nanos_conf, load_table
 from ..session import tune_for_oracle
+from ..streaming import await_drain, start_foreach_batch
 from ..streaming import windows as W
 
 
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet as a stream with the same nanos→timestamp
+def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``<table>.parquet`` as a stream with the same nanos→timestamp
     normalization the batch loader applies (catalog.load_table)."""
     ensure_nanos_conf(spark)
-    schema, nanos = _read_schema("events", f"{sf_dir}/events.parquet")
+    schema, nanos = _read_schema(table, f"{sf_dir}/{table}.parquet")
     df = (
         spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
+        .option("pathGlobFilter", f"{table}.parquet")
         .parquet(sf_dir)
     )
     for c in nanos:
         df = df.withColumn(c, F.expr(f"timestamp_micros({c} div 1000)"))
     return df
+
+
+@contextmanager
+def _file_stream(spark: SparkSession, df: DataFrame, prefix: str):
+    """Yield ``(tmp_dir, stream)``: ``df`` written as 4 parquet files
+    under a temporary directory and read back one file per micro-batch,
+    so a fold really merges across batches (one availableNow batch
+    would make stream ≡ batch a tautology). The directory is removed on
+    exit."""
+    with tempfile.TemporaryDirectory(
+        prefix=prefix, ignore_cleanup_errors=True
+    ) as tmp:
+        src = os.path.join(tmp, "src")
+        df.repartition(4).write.parquet(src)
+        yield tmp, (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
 
 
 def _drain(spark: SparkSession, stream_df: DataFrame, mode: str):
@@ -47,7 +69,7 @@ def _drain(spark: SparkSession, stream_df: DataFrame, mode: str):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    await_drain(q)
     return spark.table(name)
 
 
@@ -87,7 +109,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         want = _rows(batch_df, cols)
         results.append((op, len(got), len(want), got == want))
 
-    stream = _stream_events(spark, sf_dir)
+    stream = _stream_table(spark, sf_dir, "events")
 
     check(
         "st1_rate_limit",
@@ -156,7 +178,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.freq import finalize_exact, run_heavy_hitters_stream
 
     hh_state = run_heavy_hitters_stream(
-        _stream_events(spark, sf_dir).select("user_id"), "user_id", 0.008
+        stream.select("user_id"), "user_id", 0.008
     )
     hh_got = _rows(
         finalize_exact(batch_events, "user_id", 0.008, hh_state),
@@ -174,8 +196,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an index whose bucket-pruned search equals the one-shot direct
     # search — exact by construction (postings and doc lengths are
     # doc-local; corpus stats derive from doclens at open).
-    import tempfile
-
     from ..operators.bm25 import (
         Bm25Searcher,
         bm25_search,
@@ -184,16 +204,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from .documents import BM25_QUERIES
 
-    dschema, dnanos = _read_schema("documents", f"{sf_dir}/documents.parquet")
-    doc_stream = (
-        spark.readStream.schema(dschema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    for c in dnanos:
-        doc_stream = doc_stream.withColumn(
-            c, F.expr(f"timestamp_micros({c} div 1000)")
-        )
     idx_path = tempfile.mkdtemp(prefix="sg_bm25_")
     state = {"built": False}
 
@@ -206,12 +216,9 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             upsert_bm25_index(batch_df.sparkSession, idx_path, batch_df)
 
-    q = (
-        doc_stream.writeStream.foreachBatch(feed)
-        .trigger(availableNow=True)
-        .start()
+    await_drain(
+        start_foreach_batch(_stream_table(spark, sf_dir, "documents"), feed)
     )
-    q.awaitTermination(300)
     cols = ["query_id", "doc_id", "rank", "score"]
     bm_got = _rows(Bm25Searcher(spark, idx_path).search(BM25_QUERIES, k=5), cols)
     bm_want = _rows(
@@ -240,14 +247,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         kmv_state["sketch"] = merged.localCheckpoint(eager=True)
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id")
-        .writeStream.foreachBatch(feed_kmv)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    await_drain(start_foreach_batch(stream.select("user_id"), feed_kmv))
     kmv_got = _rows(kmv_state["sketch"], ["uk"]) if kmv_state["sketch"] is not None else []
     kmv_want = _rows(kmv_sketch(batch_events, "user_id", 256), ["uk"])
     results.append(
@@ -270,14 +270,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cms_state["sketch"] = merged.localCheckpoint(eager=True)
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id")
-        .writeStream.foreachBatch(feed_cms)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    await_drain(start_foreach_batch(stream.select("user_id"), feed_cms))
     cms_cols = ["row", "bucket", "cnt"]
     cms_got = (
         _rows(cms_state["sketch"], cms_cols)
@@ -307,14 +300,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             GK.merge_two(gk_state["entries"], entries), gk_eps / 2
         )
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("value")
-        .writeStream.foreachBatch(feed_gk)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    await_drain(start_foreach_batch(stream.select("value"), feed_gk))
     gk_entries = gk_state["entries"]
     gk_n = GK.total_count(gk_entries)
     gk_vals = batch_events.select("value").where(F.col("value").isNotNull())
@@ -346,14 +332,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def feed_cc(batch_df: DataFrame, _epoch: int) -> None:
         inc_cc.update(_cc_edges(batch_df))
 
-    q = (
-        _stream_events(spark, sf_dir)
-        .select("user_id", "value")
-        .writeStream.foreachBatch(feed_cc)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    await_drain(start_foreach_batch(stream.select("user_id", "value"), feed_cc))
     cc_cols = ["node", "label"]
     cc_got = (
         _rows(inc_cc.labels(), cc_cols) if inc_cc.labels() is not None else []
@@ -370,33 +349,21 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # must equal the batch first-occurrence dedup (smallest doc_id per
     # text), whatever the arrival batching. State is the versioned
     # bloom sketch + per-epoch key log (streaming/bloomdedup.py).
-    import shutil
-    import tempfile
-
     from ..operators.bloom import bloom_params
     from ..streaming.bloomdedup import stream_bloom_dedup
 
     docs_batch = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    bd_dir = tempfile.mkdtemp(prefix="st13_bloom_")
-    try:
-        src = os.path.join(bd_dir, "src")
-        docs_batch.repartition(4).write.parquet(src)
-        doc_stream = (
-            spark.readStream.schema(docs_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
+    with _file_stream(spark, docs_batch, "st13_bloom_") as (bd_dir, doc_stream):
         m_bits, k_hashes = bloom_params(max(docs_batch.count(), 1), 0.03)
         novel_acc: list = []
 
         def bd_sink(novel: DataFrame, _epoch: int) -> None:
             novel_acc.extend((r.text, r.doc_id) for r in novel.collect())
 
-        qbd = stream_bloom_dedup(
+        await_drain(stream_bloom_dedup(
             doc_stream, "text", os.path.join(bd_dir, "state"),
             os.path.join(bd_dir, "ckpt"), m_bits, k_hashes, bd_sink,
-        )
-        qbd.awaitTermination(300)
+        ))
         # batch truth compares TEXT SETS: within one micro-batch the
         # surviving doc_id per duplicate text is arbitrary (matches
         # dropDuplicates semantics), across batches first-epoch wins
@@ -407,8 +374,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         results.append(
             ("st13_bloom_dedup", len(bd_got), len(bd_want), bd_got == bd_want)
         )
-    finally:
-        shutil.rmtree(bd_dir, ignore_errors=True)
 
     # st14: streaming covariance maintenance — per-micro-batch integer
     # second-moment partials (operators/covariance.py) merged by plain
@@ -419,18 +384,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.covariance import second_moments
 
     emb_batch = load_table(spark, sf_dir, "embeddings").select("embedding")
-    cov_dir = tempfile.mkdtemp(prefix="st14_cov_")
-    try:
-        # split the source into 4 files + maxFilesPerTrigger=1 so the
-        # fold really merges across micro-batches (the st13 pattern);
-        # one availableNow batch would make stream ≡ batch a tautology
-        cov_src = os.path.join(cov_dir, "src")
-        emb_batch.repartition(4).write.parquet(cov_src)
-        emb_stream = (
-            spark.readStream.schema(emb_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(cov_src)
-        )
+    with _file_stream(spark, emb_batch, "st14_cov_") as (_, emb_stream):
         cov_state: dict = {"m": None, "batches": 0}
 
         def feed_cov(batch_df: DataFrame, _epoch: int) -> None:
@@ -448,12 +402,7 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             cov_state["m"] = merged.localCheckpoint(eager=True)
             cov_state["batches"] += 1
 
-        q = (
-            emb_stream.writeStream.foreachBatch(feed_cov)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+        await_drain(start_foreach_batch(emb_stream, feed_cov))
         cov_cols = ["i", "j", "s", "n_rows"]
         cov_got = (
             _rows(cov_state["m"], cov_cols) if cov_state["m"] is not None else []
@@ -463,8 +412,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("st14_covariance_moments", len(cov_got), len(cov_want),
              cov_got == cov_want and cov_state["batches"] >= 2)
         )
-    finally:
-        shutil.rmtree(cov_dir, ignore_errors=True)
 
     # st15: incremental aggregate-VIEW maintenance — the materialized
     # per-user spend view folded by per-micro-batch delta aggregation
@@ -499,23 +446,8 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         view_state["batches"] += 1
 
     ev_src_batch = batch_events.select("user_id", "value")
-    view_dir = tempfile.mkdtemp(prefix="st15_view_")
-    try:
-        # multi-file source + maxFilesPerTrigger=1: the delta merge must
-        # actually run across micro-batches (the st13/st14 pattern)
-        view_src = os.path.join(view_dir, "src")
-        ev_src_batch.repartition(4).write.parquet(view_src)
-        ev_stream = (
-            spark.readStream.schema(ev_src_batch.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(view_src)
-        )
-        q = (
-            ev_stream.writeStream.foreachBatch(feed_view)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
+    with _file_stream(spark, ev_src_batch, "st15_view_") as (_, ev_stream):
+        await_drain(start_foreach_batch(ev_stream, feed_view))
         view_cols = ["user_id", "total", "n"]
         view_got = (
             _rows(view_state["v"], view_cols)
@@ -527,8 +459,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("st15_incremental_agg_view", len(view_got), len(view_want),
              view_got == view_want and view_state["batches"] >= 2)
         )
-    finally:
-        shutil.rmtree(view_dir, ignore_errors=True)
 
     # st16: streaming SemDeDup — per-epoch kept/pruned maintenance on a
     # FROZEN quantizer (streaming/semdedup.py). The prune rule is
@@ -545,23 +475,14 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     _, sd_cents = fit_ivf_centroids(emb_all, 4, "embedding")
-    sd_dir = tempfile.mkdtemp(prefix="st16_semdedup_")
-    try:
-        sd_src = os.path.join(sd_dir, "src")
-        emb_all.repartition(4).write.parquet(sd_src)
-        sd_stream = (
-            spark.readStream.schema(emb_all.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(sd_src)
-        )
-        qsd = stream_semdedup(
+    with _file_stream(spark, emb_all, "st16_semdedup_") as (sd_dir, sd_stream):
+        await_drain(stream_semdedup(
             sd_stream,
             os.path.join(sd_dir, "state"),
             os.path.join(sd_dir, "ckpt"),
             sd_cents,
             SEMDEDUP_TAU,
-        )
-        qsd.awaitTermination(300)
+        ))
         sd_state = SemDedupState(
             os.path.join(sd_dir, "state"), sd_cents, SEMDEDUP_TAU
         )
@@ -579,8 +500,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("st16_semdedup", len(sd_got), len(sd_want),
              sd_got == sd_want and sd_state.last_epoch() >= 1)
         )
-    finally:
-        shutil.rmtree(sd_dir, ignore_errors=True)
 
     # st17: streaming DSIR — the importance-resampling weights are a
     # mergeable sketch (per-bucket target/raw counts), folded per epoch
@@ -591,24 +510,13 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.dsir import DsirState, stream_dsir
     from .trainprep import dsir_importance_sample
 
-    ds_dir = tempfile.mkdtemp(prefix="st17_dsir_")
-    try:
-        ds_src = os.path.join(ds_dir, "src")
-        docs_all = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        docs_all.repartition(4).write.parquet(ds_src)
-        ds_stream = (
-            spark.readStream.schema(docs_all.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(ds_src)
-        )
-        qds = stream_dsir(
+    docs_all = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    with _file_stream(spark, docs_all, "st17_dsir_") as (ds_dir, ds_stream):
+        await_drain(stream_dsir(
             ds_stream,
             os.path.join(ds_dir, "state"),
             os.path.join(ds_dir, "ckpt"),
-        )
-        qds.awaitTermination(300)
+        ))
         st = DsirState(os.path.join(ds_dir, "state"))
         ds_cols = ["doc_id", "n_grams", "llr", "skey"]
         samp = st.sample(spark)
@@ -618,8 +526,6 @@ def streaming_equivalence_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("st17_dsir_sample", len(ds_got), len(ds_want),
              ds_got == ds_want and st.last_epoch() >= 1)
         )
-    finally:
-        shutil.rmtree(ds_dir, ignore_errors=True)
 
     out = spark.createDataFrame(
         results, "operator string, n_stream long, n_batch long, matched boolean"

@@ -19,59 +19,32 @@ epoch (per-epoch parquet subtrees). Re-emitting the sample reads the
 full count state — per-epoch emission is the gate's shape; a
 production pipeline re-emits on demand, with the weight fit itself
 always O(B)=512 rows. Exactly-once under foreachBatch's at-least-once
-redelivery via the versioned-epoch marker scheme of
-streaming/bloomdedup.py: a replayed committed epoch is skipped
-outright; duplicate doc_ids (intra-batch or cross-epoch) are dropped
-before append so counts are never double-added
-(tests/test_stream_exactly_once.py).
+redelivery via the shared ``streaming.EpochStore`` (per-epoch
+``fbc_epoch=N`` directories plus the commit marker): a replayed
+committed epoch is skipped outright; duplicate doc_ids (intra-batch
+or cross-epoch) are dropped before append so counts are never
+double-added (tests/test_stream_exactly_once.py).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import ws_tokens
 from ..plans.trainprep import dsir_bucket_counts, dsir_sample_from_counts
+from . import EpochStore, start_foreach_batch
 
 __all__ = ["DsirState", "stream_dsir"]
 
-_MARKER = "last_committed_epoch.txt"
 
-
-class DsirState:
+class DsirState(EpochStore):
     """Versioned (doc_id, b, cnt) bucket-count state under one
     directory."""
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-        os.makedirs(root, exist_ok=True)
-
-    # -- epoch bookkeeping (the bloomdedup scheme) --------------------------
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def _epoch_paths(self, epoch: int) -> list[str]:
-        return sorted(
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith("fbc_epoch=") and int(d.split("=")[1]) <= epoch
-        )
-
     def counts(self, spark, epoch: int) -> DataFrame | None:
         """(doc_id, b, cnt) committed at-or-before ``epoch``."""
-        paths = self._epoch_paths(epoch) if epoch >= 0 else []
-        return spark.read.parquet(*paths) if paths else None
+        return self.read(spark, "fbc", epoch)
 
     def sample(self, spark) -> DataFrame | None:
         """The maintained DSIR sample over everything committed —
@@ -102,17 +75,15 @@ class DsirState:
             new.select("doc_id", ws_tokens(F.col("text")).alias("ws"))
         ).localCheckpoint(eager=True)
         # write THIS epoch's counts (overwrite-safe on replay), then
-        # commit the marker — the bloomdedup crash contract. An epoch
+        # commit the marker — the EpochStore crash contract. An epoch
         # whose batch fully dedupes away (or carries only <2-token
         # docs) yields ZERO count rows: skip the write but still commit
         # the marker — an empty parquet dir has no data files, and a
         # later counts() read would die on schema inference instead of
         # returning the correct (empty) contribution.
         if fbc.count():
-            fbc.write.mode("overwrite").parquet(
-                os.path.join(self.root, f"fbc_epoch={int(epoch_id)}")
-            )
-        self._commit(epoch_id)
+            fbc.write.mode("overwrite").parquet(self.path("fbc", epoch_id))
+        self.commit(epoch_id)
         return True
 
 
@@ -120,7 +91,6 @@ def stream_dsir(
     stream_df: DataFrame,
     state_root: str,
     checkpoint: str,
-    available_now: bool = True,
 ):
     """Continuous DSIR state maintenance over a (doc_id, text) stream.
     Read the maintained sample back with ``DsirState(...).sample``.
@@ -130,9 +100,4 @@ def stream_dsir(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         state.apply_batch(batch_df, epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _fold, checkpoint)

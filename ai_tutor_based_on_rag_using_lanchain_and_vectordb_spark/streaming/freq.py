@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.freq import _domain_filter, _mg_summaries, mg_trim
+from . import await_drain, start_foreach_batch
 
 
 class MgState:
@@ -131,24 +132,14 @@ def run_heavy_hitters_stream(
     # redelivered, and a batch that ran but died before its checkpoint
     # commit is redelivered with the same epoch id — absorb() skips it.
     ckpt = checkpoint or f"/tmp/hh_stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.foreachBatch(on_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", ckpt)
-        .start()
+    q = start_foreach_batch(stream_df, on_batch, ckpt)
+    # a partial drain would silently under-count: the wait stops the
+    # query and raises; the checkpoint + state_path let a retry resume
+    await_drain(
+        q, timeout,
+        f"heavy-hitters checkpoint={ckpt}; rerun with the same checkpoint "
+        "and state_path to resume",
     )
-    # awaitTermination(timeout) returns False on timeout with the query
-    # still running — a partial drain. Returning the state then would
-    # silently under-count, so stop the query and fail loudly; the
-    # checkpoint + state_path make a retry resume where this one ended.
-    if not q.awaitTermination(timeout):
-        q.stop()
-        raise TimeoutError(
-            f"heavy-hitters stream did not drain within {timeout}s "
-            f"(checkpoint={ckpt}); state is partial through epoch "
-            f"{state.last_epoch} — rerun with the same checkpoint and "
-            "state_path to resume"
-        )
     return state
 
 

@@ -23,15 +23,14 @@ State is O(corpus) vectors but O(batch) WRITE per epoch (per-epoch
 parquet subtrees, the operators/ann_index.py cell-layout idea), and the
 pair work per batch is new×(cell-mates) only — history×history is never
 re-scored. Exactly-once under foreachBatch's at-least-once redelivery
-via the versioned-epoch marker scheme of streaming/bloomdedup.py: a
-replayed committed epoch is skipped outright; a crash before the marker
-move replays against unchanged state and regenerates byte-identical
-epoch files (tests/test_stream_exactly_once.py).
+via the shared ``streaming.EpochStore`` (per-epoch ``vecs_epoch=N`` and
+``pruned_epoch=N`` directories plus the commit marker): a replayed
+committed epoch is skipped outright; a crash before the marker move
+replays against unchanged state and regenerates byte-identical epoch
+files (tests/test_stream_exactly_once.py).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -40,14 +39,14 @@ from pyspark.sql import functions as F
 from ..functions import vector as V
 from ..operators.semdedup import assign_cells
 from ..session import default_parallelism
+from . import EpochStore, start_foreach_batch
 
 __all__ = ["SemDedupState", "stream_semdedup"]
 
-_MARKER = "last_committed_epoch.txt"
 _SALTS = 8
 
 
-class SemDedupState:
+class SemDedupState(EpochStore):
     """Versioned (vectors, demotions) state under one directory."""
 
     def __init__(
@@ -57,40 +56,17 @@ class SemDedupState:
         threshold: float,
         dim: int = V.EMBEDDING_DIM,
     ) -> None:
-        self.root = root
+        super().__init__(root)
         self.centroids = np.asarray(centroids, dtype=np.float64)
         self.threshold = float(threshold)
         self.dim = dim
-        os.makedirs(root, exist_ok=True)
-
-    # -- epoch bookkeeping (the bloomdedup scheme) --------------------------
-    def last_epoch(self) -> int:
-        p = os.path.join(self.root, _MARKER)
-        if not os.path.exists(p):
-            return -1
-        with open(p) as fh:
-            return int(fh.read().strip() or "-1")
-
-    def _commit(self, epoch: int) -> None:
-        with open(os.path.join(self.root, _MARKER), "w") as fh:
-            fh.write(str(int(epoch)))
-
-    def _epoch_paths(self, prefix: str, epoch: int) -> list[str]:
-        return sorted(
-            os.path.join(self.root, d)
-            for d in os.listdir(self.root)
-            if d.startswith(f"{prefix}_epoch=")
-            and int(d.split("=")[1]) <= epoch
-        )
 
     def vectors(self, spark, epoch: int) -> DataFrame | None:
         """(vec_id, embedding, cell) committed at-or-before ``epoch``."""
-        paths = self._epoch_paths("vecs", epoch) if epoch >= 0 else []
-        return spark.read.parquet(*paths) if paths else None
+        return self.read(spark, "vecs", epoch)
 
     def pruned_ids(self, spark, epoch: int) -> DataFrame | None:
-        paths = self._epoch_paths("pruned", epoch) if epoch >= 0 else []
-        return spark.read.parquet(*paths) if paths else None
+        return self.read(spark, "pruned", epoch)
 
     def decisions(self, spark) -> DataFrame | None:
         """Final (vec_id, cell, kept) over everything committed —
@@ -189,14 +165,10 @@ class SemDedupState:
         ).distinct()
 
         # write THIS epoch's state (overwrite-safe on replay), then
-        # commit the marker — the bloomdedup crash contract
-        new.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"vecs_epoch={int(epoch_id)}")
-        )
-        demoted.write.mode("overwrite").parquet(
-            os.path.join(self.root, f"pruned_epoch={int(epoch_id)}")
-        )
-        self._commit(epoch_id)
+        # commit the marker — the EpochStore crash contract
+        new.write.mode("overwrite").parquet(self.path("vecs", epoch_id))
+        demoted.write.mode("overwrite").parquet(self.path("pruned", epoch_id))
+        self.commit(epoch_id)
         return True
 
 
@@ -207,7 +179,6 @@ def stream_semdedup(
     centroids: np.ndarray,
     threshold: float,
     dim: int = V.EMBEDDING_DIM,
-    available_now: bool = True,
 ):
     """Continuous semantic dedup of a (vec_id, embedding) stream on a
     frozen quantizer. Read the maintained decision set back with
@@ -218,9 +189,4 @@ def stream_semdedup(
     def _fold(batch_df: DataFrame, epoch_id: int) -> None:
         state.apply_batch(batch_df, epoch_id)
 
-    writer = stream_df.writeStream.foreachBatch(_fold).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _fold, checkpoint)
