@@ -215,6 +215,33 @@ def splitter_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sine440(rate: int, n: int) -> list[int]:
+    """``n`` PCM16 samples of a 0.5-amplitude 440 Hz sine at ``rate`` Hz."""
+    import math
+
+    return [int(16383 * math.sin(2 * math.pi * 440 * i / rate)) for i in range(n)]
+
+
+def _half_loud_samples(rate: int = 8000) -> list[int]:
+    """100 ms of the 0.5-amplitude 440 Hz sine, then 100 ms of silence."""
+    return _sine440(rate, rate // 10) + [0] * (rate // 10)
+
+
+def _pcm16_wav(samples, rate: int) -> bytes:
+    """Mono 16-bit PCM WAV file holding ``samples``."""
+    import io
+    import struct
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as f:
+        f.setnchannels(1)
+        f.setsampwidth(2)
+        f.setframerate(rate)
+        f.writeframes(b"".join(struct.pack("<h", v) for v in samples))
+    return buf.getvalue()
+
+
 def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize REAL PNG / WAV / FLAC / MP4 payloads in-engine, one of
     each per doc_id < 64, with every header parameter a fixed arithmetic
@@ -227,10 +254,7 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     stereo with a doc-dependent sample count, so the compressed-audio
     decode (sources/flac.py: frame walk, LPC/fixed subframes, stereo
     reconstruction) is what produces the oracle-checked fields."""
-    import io
-    import math
     import struct
-    import wave
     import zlib
     from collections.abc import Iterator
 
@@ -252,20 +276,6 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
             raw = b"".join(b"\x00" + b"\x7f" * (w * 3) for _ in range(h))
             return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
                     + chunk(b"IDAT", zlib.compress(raw)) + chunk(b"IEND", b""))
-
-        def wav(rate, n):
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as f:
-                f.setnchannels(1)
-                f.setsampwidth(2)
-                f.setframerate(rate)
-                f.writeframes(
-                    b"".join(
-                        struct.pack("<h", int(16383 * math.sin(2 * math.pi * 440 * i / rate)))
-                        for i in range(n)
-                    )
-                )
-            return buf.getvalue()
 
         def box(btype, payload):
             return struct.pack(">I", 8 + len(payload)) + btype + payload
@@ -290,7 +300,8 @@ def _synth_media_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
                              "content": png(w, h), "meta": {"ext": "png"}})
                 rate = 8000 + (did % 3) * 4000
                 rows.append({"asset_id": did, "owner_id": 0, "media_type": "audio",
-                             "content": wav(rate, rate // 10), "meta": {"ext": "wav"}})
+                             "content": _pcm16_wav(_sine440(rate, rate // 10), rate),
+                             "meta": {"ext": "wav"}})
                 nf = rate // 10 + did
                 tt = np.arange(nf)
                 fs = np.stack(
@@ -405,10 +416,7 @@ def multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One row, pass flag (rows-only: frame/window decode isn't
     SQL-expressible); pytest asserts it too."""
-    import io
     import math
-    import struct
-    import wave
     from collections.abc import Iterator
 
     import numpy as np
@@ -421,32 +429,15 @@ def multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.mpegps import encode_mpeg_ps
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def half_loud_samples(rate=8000):
-            return [
-                int(16383 * math.sin(2 * math.pi * 440 * i / rate))
-                for i in range(rate // 10)
-            ] + [0] * (rate // 10)
-
-        def wav_half_loud(rate=8000):
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as f:
-                f.setnchannels(1)
-                f.setsampwidth(2)
-                f.setframerate(rate)
-                f.writeframes(
-                    b"".join(struct.pack("<h", v) for v in half_loud_samples(rate))
-                )
-            return buf.getvalue()
-
-        def flac_half_loud(rate=8000):
-            return encode_flac(
-                np.array(half_loud_samples(rate), dtype=np.int64),
-                sample_rate=rate,
-                bits_per_sample=16,
-                block_size=256,
-                lpc_order=8,
-            )
-
+        half_loud = _half_loud_samples()
+        wav_half_loud = _pcm16_wav(half_loud, 8000)
+        flac_half_loud = encode_flac(
+            np.array(half_loud, dtype=np.int64),
+            sample_rate=8000,
+            bits_per_sample=16,
+            block_size=256,
+            lpc_order=8,
+        )
         for pdf in batches:
             rows = []
             for did in pdf["doc_id"]:
@@ -468,11 +459,11 @@ def multimodal_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
                              "meta": {"ext": "mp4"}})
                 rows.append({"asset_id": did, "owner_id": 0,
                              "media_type": "audio",
-                             "content": wav_half_loud(),
+                             "content": wav_half_loud,
                              "meta": {"ext": "wav"}})
                 rows.append({"asset_id": did + 200, "owner_id": 0,
                              "media_type": "audio",
-                             "content": flac_half_loud(),
+                             "content": flac_half_loud,
                              "meta": {"ext": "flac"}})
                 # MPEG-1 ES (asset_id offset +100): 2 uniform-gray
                 # pictures, level 50+did then +20 — the I picture and a
@@ -574,10 +565,6 @@ def audio_spectral_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
       real DSP, not just headers).
 
     One row, pass flag (rows-only: FFTs aren't SQL-expressible)."""
-    import io
-    import math
-    import struct
-    import wave
     from collections.abc import Iterator
 
     import numpy as np
@@ -587,36 +574,23 @@ def audio_spectral_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.flac import encode_flac
 
     def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rate = 8000
-
-        def samples():
-            return [
-                int(16383 * math.sin(2 * math.pi * 440 * i / rate))
-                for i in range(rate // 10)
-            ] + [0] * (rate // 10)
-
+        samples = _half_loud_samples()
+        wav = _pcm16_wav(samples, 8000)
+        flac = encode_flac(
+            np.array(samples, dtype=np.int64), sample_rate=8000,
+            bits_per_sample=16, block_size=256, lpc_order=8,
+        )
         for pdf in batches:
             rows = []
             for did in pdf["doc_id"]:
                 did = int(did)
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as f:
-                    f.setnchannels(1)
-                    f.setsampwidth(2)
-                    f.setframerate(rate)
-                    f.writeframes(
-                        b"".join(struct.pack("<h", v) for v in samples())
-                    )
                 rows.append({"asset_id": did, "owner_id": 0,
                              "media_type": "audio",
-                             "content": buf.getvalue(),
+                             "content": wav,
                              "meta": {"ext": "wav"}})
                 rows.append({"asset_id": did + 200, "owner_id": 0,
                              "media_type": "audio",
-                             "content": encode_flac(
-                                 np.array(samples(), dtype=np.int64),
-                                 sample_rate=rate, bits_per_sample=16,
-                                 block_size=256, lpc_order=8),
+                             "content": flac,
                              "meta": {"ext": "flac"}})
             yield pd.DataFrame(
                 rows, columns=[f.name for f in MM.MEDIA_ASSETS.fields]

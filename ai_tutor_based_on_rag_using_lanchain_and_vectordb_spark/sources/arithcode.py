@@ -365,21 +365,16 @@ def decode_dc(
 
 
 def encode_ac(
-    enc: ArithEncoder, stats: bytearray, fixed: bytearray,
-    coeffs, Kx: int, ss: int = 1, se: int = 63,
+    enc: ArithEncoder, stats: bytearray, fixed: bytearray, coeffs, Kx: int,
 ) -> None:
-    """``coeffs``: the 64 quantized coefficients in ZIGZAG order,
-    already point-transformed for progressive first scans. ``ss..se``
-    bounds the spectral band (sequential: 1..63)."""
-    # ke floors at ss-1 so an all-zero band codes its trailing EOB at
-    # context 3*(ss-1) — the bin decode_ac reads first (T.81 F.1.4.3
-    # uses 3*(k-1) with k starting at Ss).
-    ke = ss - 1
-    for k in range(se, ss - 1, -1):
+    """``coeffs``: the 64 quantized coefficients in ZIGZAG order; codes
+    the AC band 1..63."""
+    ke = 0  # index of the last nonzero AC coefficient (0: none)
+    for k in range(63, 0, -1):
         if coeffs[k]:
             ke = k
             break
-    k = ss
+    k = 1
     while k <= ke:
         st = 3 * (k - 1)
         enc.encode(stats, st, 0)  # not EOB
@@ -417,27 +412,24 @@ def encode_ac(
         while m := m >> 1:
             enc.encode(stats, sp, 1 if (m & (v)) else 0)
         k += 1
-    if ke < se:
-        st = 3 * (ke + 1 - 1)
-        enc.encode(stats, st, 1)  # EOB
+    if ke < 63:
+        enc.encode(stats, 3 * ke, 1)  # EOB
 
 
 def decode_ac(
-    dec: ArithDecoder, stats: bytearray, fixed: bytearray,
-    block, Kx: int, ss: int = 1, se: int = 63, al: int = 0,
+    dec: ArithDecoder, stats: bytearray, fixed: bytearray, block, Kx: int,
 ) -> None:
-    """Fills ``block`` (64 entries, ZIGZAG order) for the band
-    ``ss..se`` (sequential: 1..63); stored values are shifted left by
-    ``al`` (progressive first-scan point transform)."""
-    k = ss
-    while k <= se:
+    """Fills ``block`` (64 entries, ZIGZAG order) for the AC band
+    1..63."""
+    k = 1
+    while k <= 63:
         st = 3 * (k - 1)
         if dec.decode(stats, st):
             return  # EOB
         while dec.decode(stats, st + 1) == 0:
             st += 3
             k += 1
-            if k > se:
+            if k > 63:
                 raise ValueError("AC run past end of band")
         sign = dec.decode(fixed, 0)
         sp = st + 2
@@ -457,195 +449,5 @@ def decode_ac(
             if dec.decode(stats, sp):
                 v |= m
         v += 1
-        block[k] = (-v if sign else v) << al
+        block[k] = -v if sign else v
         k += 1
-
-
-# --------------------------------------------------------------------------
-# Progressive refinement models (T.81 Annex G.2 / G.3): DC refinement
-# is one raw bit per block through the fixed bin; AC refinement codes,
-# per band position, a correction bit for previously-nonzero
-# coefficients (context st+2) and newly-significant coefficients via
-# the zero/nonzero bin (st+1) with a fixed-bin sign — with the EOB
-# decision (st) only beyond the previous stage's end-of-block index.
-# --------------------------------------------------------------------------
-
-
-def encode_dc_refine(enc: ArithEncoder, fixed: bytearray, bit: int) -> None:
-    enc.encode(fixed, 0, bit)
-
-
-def decode_dc_refine(dec: ArithDecoder, fixed: bytearray) -> int:
-    return dec.decode(fixed, 0)
-
-
-def encode_ac_refine(
-    enc: ArithEncoder, stats: bytearray, fixed: bytearray,
-    prev, full, ss: int, se: int, al: int,
-) -> None:
-    """``prev``: the block as the decoder knows it BEFORE this scan
-    (zigzag, resolution al+1); ``full``: the fully-resolved zigzag
-    coefficients. Codes the ``al`` bit of every band position."""
-    kex = 0
-    for k in range(se, ss - 1, -1):
-        if prev[k]:
-            kex = k
-            break
-    # Same ss-1 floor as encode_ac: all-zero band → EOB at 3*(ss-1).
-    ke = ss - 1
-    for k in range(se, ss - 1, -1):
-        if (abs(full[k]) >> al) > 0:
-            ke = k
-            break
-    k = ss
-    while k <= ke:
-        st = 3 * (k - 1)
-        if k > kex:
-            enc.encode(stats, st, 0)  # not EOB yet
-        while True:
-            if prev[k]:
-                # correction bit for an already-significant coefficient
-                enc.encode(stats, st + 2, (abs(full[k]) >> al) & 1)
-                break
-            newly = 1 if (abs(full[k]) >> al) > 0 else 0
-            enc.encode(stats, st + 1, newly)
-            if newly:
-                enc.encode(fixed, 0, 1 if full[k] < 0 else 0)
-                break
-            st += 3
-            k += 1
-            if k > se:
-                raise ValueError("AC refine run past end of band")
-        k += 1
-    if ke < se:
-        st = 3 * (ke + 1 - 1)
-        if ke + 1 > kex:
-            enc.encode(stats, st, 1)  # EOB
-
-
-def decode_ac_refine(
-    dec: ArithDecoder, stats: bytearray, fixed: bytearray,
-    block, ss: int, se: int, al: int,
-) -> None:
-    """Refines ``block`` (zigzag, holding the previous stage's values)
-    in place with the ``al`` bit of each band position."""
-    p1 = 1 << al
-    m1 = -1 << al
-    kex = 0
-    for k in range(se, ss - 1, -1):
-        if block[k]:
-            kex = k
-            break
-    k = ss
-    while k <= se:
-        st = 3 * (k - 1)
-        if k > kex:
-            if dec.decode(stats, st):
-                return  # EOB
-        while True:
-            if block[k]:
-                if dec.decode(stats, st + 2):
-                    block[k] += m1 if block[k] < 0 else p1
-                break
-            if dec.decode(stats, st + 1):
-                block[k] = m1 if dec.decode(fixed, 0) else p1
-                break
-            st += 3
-            k += 1
-            if k > se:
-                raise ValueError("AC refine run past end of band")
-        k += 1
-
-
-# ---------------------------------------------------------------------------
-# Annex H.2 lossless statistical model: the DC difference model above,
-# re-conditioned on a TWO-dimensional context — the differences already
-# coded for the sample to the left (Da) and the sample above (Db), each
-# classified into the same five categories F.1.4.4.1.2 uses for the
-# sequential DC conditioning (zero/small, ±medium, ±large under the
-# DAC L/U thresholds). 25 context quads (S0/SS/SP/SN) at bins 0..99,
-# then TWO magnitude-category runs (X1..X15 + 14 magnitude-bit bins):
-# one at 100 used while Db is not large, one at 129 used when |Db| is
-# in the large category — 158 bins total, the spec's stated size for
-# the lossless statistics area.
-# ---------------------------------------------------------------------------
-
-LOSSLESS_STAT_BINS = 158
-_XRUN_SMALL = 100  # X1 when Db classifies below the large category
-_XRUN_LARGE = 129  # X1 when Db is large
-
-
-def classify_diff(d: int, L: int, U: int) -> int:
-    """F.1.4.4.1.2 five-way classification of a coded difference:
-    0 zero/small, 1 +medium, 2 -medium, 3 +large, 4 -large."""
-    a = abs(d)
-    if a == 0 or 2 * a <= (1 << L):
-        return 0
-    cat = 1 if d > 0 else 2
-    if 2 * a > (1 << U):
-        cat += 2
-    return cat
-
-
-def encode_lossless_diff(
-    enc: ArithEncoder, stats: bytearray, da: int, db: int,
-    diff: int, L: int, U: int,
-) -> None:
-    """Code one prediction difference (signed, -32768..32767) under the
-    (Da, Db) two-dimensional context."""
-    ca, cb = classify_diff(da, L, U), classify_diff(db, L, U)
-    st = 4 * (5 * ca + cb)
-    if diff == 0:
-        enc.encode(stats, st, 0)
-        return
-    enc.encode(stats, st, 1)
-    if diff > 0:
-        enc.encode(stats, st + 1, 0)
-        sp = st + 2
-        v = diff
-    else:
-        enc.encode(stats, st + 1, 1)
-        sp = st + 3
-        v = -diff
-    m = 0
-    v -= 1
-    if v:
-        enc.encode(stats, sp, 1)
-        m = 1
-        sp = _XRUN_LARGE if cb >= 3 else _XRUN_SMALL
-        v2 = v
-        while v2 >> 1:
-            v2 >>= 1
-            enc.encode(stats, sp, 1)
-            m <<= 1
-            sp += 1
-    enc.encode(stats, sp, 0)
-    sp += 14
-    while m := m >> 1:
-        enc.encode(stats, sp, 1 if (m & v) else 0)
-
-
-def decode_lossless_diff(
-    dec: ArithDecoder, stats: bytearray, da: int, db: int, L: int, U: int,
-) -> int:
-    ca, cb = classify_diff(da, L, U), classify_diff(db, L, U)
-    st = 4 * (5 * ca + cb)
-    if dec.decode(stats, st) == 0:
-        return 0
-    sign = dec.decode(stats, st + 1)
-    sp = st + 2 + sign
-    m = dec.decode(stats, sp)
-    if m:
-        sp = _XRUN_LARGE if cb >= 3 else _XRUN_SMALL
-        while dec.decode(stats, sp):
-            m <<= 1
-            if m == 0x8000:
-                raise ValueError("lossless magnitude overflow")
-            sp += 1
-    v = m
-    sp += 14
-    while m := m >> 1:
-        if dec.decode(stats, sp):
-            v |= m
-    v += 1
-    return -v if sign else v

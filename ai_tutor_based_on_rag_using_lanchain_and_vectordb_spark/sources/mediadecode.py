@@ -1,24 +1,26 @@
-"""Pure-stdlib media header decoders — the real (non-stub) kernels
-behind the multimodal stages, same approach as ``minidecode.py`` for
-PDF/DOCX: parse the container format directly instead of depending on
-PIL/cv2/librosa (not in this environment).
-
-Scope is header/metadata decode plus FULL pixel decode for PNG
-(``decode_png_pixels``: IDAT inflate + all five scanline filters +
-palette expansion — PNG's pixel layer is zlib, which IS stdlib; JPEG
-entropy / GIF LZW / BMP RLE decode are not):
+"""Pure-stdlib media decoders — the real (non-stub) kernels behind the
+multimodal stages, same approach as ``minidecode.py`` for PDF/DOCX:
+parse the container format directly instead of depending on
+PIL/cv2/librosa (not in this environment). Headers and metadata:
 
 - PNG:  IHDR width/height/bit-depth/color-type → channels
-- GIF:  87a/89a logical screen descriptor
+- GIF:  87a/89a logical screen descriptor (metadata only, no pixels)
 - BMP:  BITMAPINFOHEADER (and the legacy BITMAPCOREHEADER)
-- JPEG: SOF0/1/2/3/5/6/7/9/10/11/13/14/15 frame header scan
-- WAV:  RIFF fmt chunk (channels/rate/bits) + PCM16 data stats
+- JPEG: frame header of every coding process (SOF0-15, DHP)
+- WAV:  RIFF fmt chunk (channels/rate/bits) + PCM stats
         (n_samples, duration, rms, peak — numpy over the raw buffer)
+- FLAC: full decode via sources/flac.py
+- MP4:  ISO BMFF box walk (duration, track dims, MJPEG sample tables)
 
-These cover the formats a metadata/curation pipeline actually filters
-on (dimensions, aspect, channel count, duration, loudness) without any
-per-pixel work. Everything is called from Arrow-batched ``mapInPandas``
-kernels (multimodal.py) — bytes in, small tuples out, no Python in any
+Pixels: PNG (every legal depth, Adam7, palette), BMP (uncompressed
+24/32-bit, 16-bit packed, paletted 1/4/8-bit) and JPEG baseline,
+extended-sequential, progressive and sequential-arithmetic frames
+(SOF0/1/2/9, grayscale / YCbCr / CMYK-YCCK). Every other image variant
+(GIF, RLE BMP, lossless / hierarchical / progressive-arithmetic JPEG)
+keeps its metadata with no pixels.
+
+Everything is called from Arrow-batched ``mapInPandas`` kernels
+(multimodal.py) — bytes in, small tuples out, no Python in any
 per-row Spark expression.
 
 Reference analog: the upload path accepts arbitrary binary
@@ -28,6 +30,8 @@ is part of the beyond-reference training-data-pipeline surface.
 
 from __future__ import annotations
 
+import itertools
+import re
 import struct
 from typing import NamedTuple
 
@@ -40,7 +44,7 @@ class ImageInfo(NamedTuple):
 
 
 class AudioInfo(NamedTuple):
-    format: str  # "wav"
+    format: str  # "wav" | "flac"
     channels: int
     sample_rate: int
     bits_per_sample: int
@@ -87,151 +91,6 @@ def decode_gif(data: bytes) -> ImageInfo | None:
     return ImageInfo("gif", width, height, 3)  # palette entries are RGB
 
 
-def _gif_lzw(min_code_size: int, data: bytes, max_pixels: int) -> bytearray | None:
-    """GIF-variant LZW decompress (GIF89a spec, appendix F): variable
-    code width starting at min_code_size+1, clear/EOI codes, dictionary
-    grows to 12 bits then waits for a clear. ``max_pixels`` bounds the
-    output — the header is untrusted and a crafted stream must not
-    balloon memory."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-
-    def reset():
-        return {i: bytes([i]) for i in range(clear)}, min_code_size + 1
-
-    table, width = reset()
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = 0
-    next_code = eoi + 1
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table, width = reset()
-                next_code = eoi + 1
-                prev = None
-                continue
-            if code == eoi:
-                return out
-            if prev is None:
-                entry = table.get(code)
-                if entry is None:
-                    return None
-            elif code in table:
-                entry = table[code]
-            elif code == next_code:  # KwKwK case
-                entry = prev + prev[:1]
-            else:
-                return None
-            out += entry
-            if len(out) > max_pixels:
-                return None
-            if prev is not None and next_code < 4096:
-                table[next_code] = prev + entry[:1]
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-            prev = entry
-    return out
-
-
-_GIF_INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def decode_gif_pixels(data: bytes):
-    """First-frame GIF pixel decode, pure Python LZW + numpy: global or
-    local color table, interlacing, sub-block reassembly. Returns a
-    (height, width, 3) uint8 RGB array (the logical screen, with the
-    frame composited at its offset over the background), or None for
-    malformed streams."""
-    import numpy as np
-
-    info = decode_gif(data)
-    if info is None or len(data) < 14:
-        return None
-    sw, sh = info.width, info.height
-    if sw * sh > 64_000_000:  # untrusted header bound
-        return None
-    flags = data[10]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        if pos + 3 * n > len(data):
-            return None
-        gct = np.frombuffer(data, dtype=np.uint8, count=3 * n, offset=pos).reshape(n, 3)
-        pos += 3 * n
-    bg_index = data[11]
-    screen = np.zeros((sh, sw, 3), dtype=np.uint8)
-    if gct is not None and bg_index < len(gct):
-        screen[:, :] = gct[bg_index]
-
-    while pos < len(data):
-        b = data[pos]
-        if b == 0x21:  # extension: label + sub-blocks
-            pos += 2
-            while pos < len(data) and data[pos] != 0:
-                pos += 1 + data[pos]
-            pos += 1
-        elif b == 0x2C:  # image descriptor
-            if pos + 10 > len(data):
-                return None
-            x, y, w, h = struct.unpack("<HHHH", data[pos + 1 : pos + 9])
-            iflags = data[pos + 9]
-            pos += 10
-            table = gct
-            if iflags & 0x80:  # local color table
-                n = 2 << (iflags & 0x07)
-                if pos + 3 * n > len(data):
-                    return None
-                table = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * n, offset=pos
-                ).reshape(n, 3)
-                pos += 3 * n
-            if table is None or pos >= len(data):
-                return None
-            min_code_size = data[pos]
-            pos += 1
-            if not (2 <= min_code_size <= 8):  # spec: color bits, ≤ 8
-                return None
-            lzw = bytearray()
-            while pos < len(data) and data[pos] != 0:
-                ln = data[pos]
-                lzw += data[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            idx = _gif_lzw(min_code_size, bytes(lzw), w * h)
-            if idx is None or len(idx) < w * h:
-                return None
-            frame = np.frombuffer(bytes(idx[: w * h]), dtype=np.uint8)
-            if frame.max(initial=0) >= len(table):
-                return None
-            frame = frame.reshape(h, w)
-            if iflags & 0x40:  # interlaced: rows arrive in 4 passes
-                deinter = np.zeros_like(frame)
-                src = 0
-                for start, step in _GIF_INTERLACE_PASSES:
-                    n_rows = len(range(start, h, step))
-                    deinter[start::step] = frame[src : src + n_rows]
-                    src += n_rows
-                frame = deinter
-            rgb = table[frame]
-            if y >= sh or x >= sw:  # frame entirely off-screen
-                return screen
-            y2, x2 = min(y + h, sh), min(x + w, sw)
-            screen[y:y2, x:x2] = rgb[: y2 - y, : x2 - x]
-            return screen  # first frame only (curation needs one)
-        elif b == 0x3B:  # trailer
-            break
-        else:
-            return None
-    return None
-
-
 def decode_bmp(data: bytes) -> ImageInfo | None:
     if len(data) < 26 or data[:2] != b"BM":
         return None
@@ -251,68 +110,13 @@ def decode_bmp(data: bytes) -> ImageInfo | None:
     return ImageInfo("bmp", width, abs(height), channels)
 
 
-def _bmp_rle_decode(data: bytes, w: int, h: int, four_bit: bool):
-    """RLE8/RLE4 (BI_RLE8/BI_RLE4) -> (h, w) palette indexes, bottom-up
-    row order like the uncompressed layouts. Escapes: 0=end-of-line,
-    1=end-of-bitmap, 2=delta; other second bytes after a zero start an
-    absolute run. Fail-soft: a truncated stream keeps what decoded."""
-    import numpy as np
-
-    if w * h > 64_000_000:  # untrusted header bound
-        return None
-    out = np.zeros((h, w), dtype=np.uint8)
-    x = y = pos = 0
-    n = len(data)
-    while pos + 1 < n and y < h:
-        cnt, val = data[pos], data[pos + 1]
-        pos += 2
-        if cnt:  # encoded run
-            if four_bit:
-                pair = [(val >> 4) & 0x0F, val & 0x0F]
-                run = [pair[i % 2] for i in range(cnt)]
-            else:
-                run = [val] * cnt
-            end = min(x + cnt, w)
-            out[y, x:end] = run[: end - x]
-            x = end
-        elif val == 0:  # end of line
-            x, y = 0, y + 1
-        elif val == 1:  # end of bitmap
-            break
-        elif val == 2:  # delta
-            if pos + 1 >= n:
-                break
-            x = min(x + data[pos], w)
-            y += data[pos + 1]
-            pos += 2
-            if y >= h:
-                break
-        else:  # absolute mode: val literal pixels, word-aligned
-            if four_bit:
-                nbytes = (val + 1) // 2
-                lit = []
-                for i in range(val):
-                    if pos + i // 2 >= n:
-                        break
-                    b = data[pos + i // 2]
-                    lit.append((b >> 4) & 0x0F if i % 2 == 0 else b & 0x0F)
-            else:
-                nbytes = val
-                lit = list(data[pos : pos + val])
-            pos += nbytes + (nbytes & 1)
-            end = min(x + len(lit), w)
-            out[y, x:end] = lit[: end - x]
-            x = end
-    return out[::-1]  # RLE bitmaps are always bottom-up
-
-
 def decode_bmp_pixels(data: bytes):
     """BMP pixel decode for BITMAPINFOHEADER DIBs: uncompressed 24/32
     bit BGR(A), 16-bit packed (X1R5G5B5 default or BI_BITFIELDS masks,
-    e.g. RGB565), uncompressed paletted 1/4/8-bit, and RLE8/RLE4. Rows
-    are bottom-up (or top-down when height is negative) padded to
-    4-byte boundaries; paletted images expand through the BGRA color
-    table to (height, width, 3) RGB."""
+    e.g. RGB565) and uncompressed paletted 1/4/8-bit. Rows are
+    bottom-up (or top-down when height is negative) padded to 4-byte
+    boundaries; paletted images expand through the BGRA color table to
+    (height, width, 3) RGB. RLE-compressed bitmaps return None."""
     import numpy as np
 
     info = decode_bmp(data)
@@ -385,35 +189,59 @@ def decode_bmp_pixels(data: bytes):
         data, dtype=np.uint8, count=4 * n_colors, offset=pal_off
     ).reshape(n_colors, 4)[:, [2, 1, 0]]  # BGRA -> RGB
 
-    if compression == 0:
-        row_bytes = ((w * bpp + 7) // 8 + 3) & ~3
-        if len(data) < pixel_off + row_bytes * h:
-            return None
-        arr = np.frombuffer(
-            data, dtype=np.uint8, count=row_bytes * h, offset=pixel_off
-        ).reshape(h, row_bytes)
-        if bpp == 8:
-            idx = arr[:, :w]
-        else:
-            bits = np.unpackbits(arr, axis=1)[:, : w * bpp].reshape(h, w, bpp)
-            weights = (1 << np.arange(bpp - 1, -1, -1)).astype(np.uint8)
-            idx = (bits * weights).sum(axis=2, dtype=np.uint16).astype(np.uint8)
-        if not top_down:
-            idx = idx[::-1]
-    elif (compression, bpp) in ((1, 8), (2, 4)):  # BI_RLE8 / BI_RLE4
-        idx = _bmp_rle_decode(data[pixel_off:], w, h, four_bit=(bpp == 4))
-        if idx is None:  # oversize / truncated RLE stream — fail closed
-            return None
-    else:
+    if compression != 0:  # RLE8/RLE4: metadata only
         return None
+    row_bytes = ((w * bpp + 7) // 8 + 3) & ~3
+    if len(data) < pixel_off + row_bytes * h:
+        return None
+    arr = np.frombuffer(
+        data, dtype=np.uint8, count=row_bytes * h, offset=pixel_off
+    ).reshape(h, row_bytes)
+    if bpp == 8:
+        idx = arr[:, :w]
+    else:
+        bits = np.unpackbits(arr, axis=1)[:, : w * bpp].reshape(h, w, bpp)
+        weights = (1 << np.arange(bpp - 1, -1, -1)).astype(np.uint8)
+        idx = (bits * weights).sum(axis=2, dtype=np.uint16).astype(np.uint8)
+    if not top_down:
+        idx = idx[::-1]
     if idx.max(initial=0) >= n_colors:
         return None
     return np.ascontiguousarray(pal[idx])
 
 
-def decode_jpeg(data: bytes) -> ImageInfo | None:
-    if len(data) < 4 or data[:2] != b"\xff\xd8":  # SOI
-        return None
+def _jpeg_entropy_end(data: bytes, p: int) -> int:
+    """Offset of the marker that ends the entropy-coded data starting
+    at ``p``: 0xFF00 is a stuffed data byte, RSTn continues the scan and
+    0xFF fill bytes are skipped; a trailing lone 0xFF is excluded."""
+    n = len(data)
+    while True:
+        p = data.find(b"\xff", p)
+        if p < 0:
+            return n
+        if p + 1 >= n:
+            return p
+        m = data[p + 1]
+        if m == 0x00 or 0xD0 <= m <= 0xD7:
+            p += 2
+        elif m == 0xFF:
+            p += 1
+        else:
+            return p
+
+
+def _jpeg_markers(data: bytes):
+    """The JPEG marker-segment walk after SOI: yields ``(marker, body,
+    start, stop)`` per length-carrying segment until EOI or the end of
+    the data. ``body`` is the segment payload; ``start`` is the offset
+    just past the segment, and ``stop`` the offset of the next marker —
+    after an SOS the two bound the scan's entropy-coded data, otherwise
+    they are equal. Stray bytes resync to the next 0xFF, fill bytes and
+    standalone markers (TEM, RSTn) are skipped; a missing SOI, or a
+    segment length under 2 or past the end of the data, raises
+    ``ValueError``."""
+    if len(data) < 4 or data[:2] != b"\xff\xd8":
+        raise ValueError("no JPEG SOI marker")
     i, n = 2, len(data)
     while i + 4 <= n:
         if data[i] != 0xFF:  # resync on stray bytes
@@ -426,24 +254,34 @@ def decode_jpeg(data: bytes) -> ImageInfo | None:
         if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
             i += 2  # standalone markers, no length
             continue
-        if marker == 0xD9:  # EOI before any SOF
-            return None
-        if i + 4 > n:
-            return None
+        if marker == 0xD9:  # EOI
+            return
         seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        if seg_len < 2:
-            return None
-        if marker in _JPEG_SOF or marker == 0xDE:
-            # 0xDE = DHP (hierarchical): SOF syntax carrying the FULL
-            # final dims — the pyramid's first SOF frame is smaller
-            if i + 2 + seg_len > n or seg_len < 8:
-                return None
-            height, width = struct.unpack(">HH", data[i + 5 : i + 9])
-            channels = data[i + 9]
-            if not (width and height and channels):
-                return None
-            return ImageInfo("jpeg", width, height, channels)
-        i += 2 + seg_len
+        if seg_len < 2 or i + 2 + seg_len > n:
+            raise ValueError("bad JPEG segment length")
+        start = i + 2 + seg_len
+        stop = _jpeg_entropy_end(data, start) if marker == 0xDA else start
+        yield marker, data[i + 4 : start], start, stop
+        i = stop
+
+
+def decode_jpeg(data: bytes) -> ImageInfo | None:
+    """Dimensions and component count from the first frame header of
+    any coding process (SOF0-15), or from DHP (0xDE), which carries a
+    hierarchical pyramid's final dimensions — its first SOF frame is
+    smaller."""
+    try:
+        for marker, body, _, _ in _jpeg_markers(data):
+            if marker in _JPEG_SOF or marker == 0xDE:
+                if len(body) < 6:
+                    return None
+                height, width = struct.unpack(">HH", body[1:5])
+                channels = body[5]
+                if not (width and height and channels):
+                    return None
+                return ImageInfo("jpeg", width, height, channels)
+    except ValueError:
+        return None
     return None
 
 
@@ -540,61 +378,57 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v - (1 << t) + 1
 
 
-def _jpeg_scan_units(
-    scan, comps, grids, coeffs, huff_dc, huff_ac,
-    mcus_x, mcus_y, restart_interval, progressive,
-    differential=False,
-):
-    """Run one scan (sequential, or any of the four progressive scan
-    kinds: DC/AC × first/refinement) over its entropy intervals,
-    accumulating coefficients in place. Returns the number of decoded
-    units (MCUs, or blocks for non-interleaved scans). ``differential``
-    (hierarchical correction frames) widens the DC category cap to 12 —
-    difference-image DC values span ±2040 at 8-bit precision."""
-    sel, ss, se, ah, al, intervals = scan
-    interleaved = len(sel) > 1
-    if interleaved:
-        units_total = mcus_x * mcus_y
-    else:
-        ci = sel[0][0]
-        cbw, cbh = grids[ci][2], grids[ci][3]
-        units_total = cbw * cbh
-    per_interval = restart_interval or units_total
-    zz = _JPEG_ZIGZAG
-
-    def blocks_of_unit(unit):
-        if interleaved:
-            my, mx = divmod(unit, mcus_x)
+def _jpeg_scan_order(sel, comps, grids, mcus_x, mcus_y):
+    """Yield one scan's units in coding order, each as its list of
+    ``(component, dc_table, ac_table, block_index)``: an MCU of an
+    interleaved scan, or one block of a single component's TRUE block
+    grid (tighter than the MCU-padded one when subsampled)."""
+    if len(sel) == 1:
+        ci, td, ta = sel[0]
+        bw, _bh, cbw, cbh = grids[ci]
+        for by in range(cbh):
+            for bx in range(cbw):
+                yield [(ci, td, ta, by * bw + bx)]
+        return
+    for my in range(mcus_y):
+        for mx in range(mcus_x):
+            unit = []
             for ci, td, ta in sel:
                 _, hi, vi, _tq = comps[ci]
                 bw = grids[ci][0]
                 for by in range(vi):
                     for bx in range(hi):
-                        yield ci, td, ta, coeffs[ci][
-                            (my * vi + by) * bw + (mx * hi + bx)
-                        ]
-        else:
-            ci, td, ta = sel[0]
-            bw = grids[ci][0]
-            cbw = grids[ci][2]
-            by, bx = divmod(unit, cbw)
-            yield ci, td, ta, coeffs[ci][by * bw + bx]
+                        idx = (my * vi + by) * bw + (mx * hi + bx)
+                        unit.append((ci, td, ta, idx))
+            yield unit
 
-    unit = 0
+
+def _jpeg_huffman_scan(data, scan, order, coeffs, progressive) -> int:
+    """Huffman entropy stage of one scan (sequential, or any of the
+    four progressive scan kinds: DC/AC × first/refinement), accumulating
+    coefficients in place. Returns the number of decoded units."""
+    huff_dc, huff_ac = scan.tables
+    ss, se, ah, al = scan.ss, scan.se, scan.ah, scan.al
+    zz = _JPEG_ZIGZAG
+    intervals = [
+        part.replace(b"\xff\x00", b"\xff")
+        for part in re.split(rb"\xff[\xd0-\xd7]", data[scan.start : scan.stop])
+    ]
+    units = iter(order)
+    decoded = 0
     state = {"eobrun": 0}
     for interval in intervals:
-        if unit >= units_total:
-            break
         br = _JpegBits(interval)
-        pred = [0] * len(comps)
+        pred = [0] * len(coeffs)
         state["eobrun"] = 0
         try:
-            for _ in range(min(per_interval, units_total - unit)):
-                for ci, td, ta, blk in blocks_of_unit(unit):
+            for unit in itertools.islice(units, scan.restart or None):
+                for ci, td, ta, idx in unit:
+                    blk = coeffs[ci][idx]
                     if ss == 0 and (not progressive or ah == 0):
                         # DC (first pass, or the whole band sequentially)
                         t = _jpeg_huff_decode(br, huff_dc[td])
-                        if t > (12 if differential else 11):
+                        if t > 11:
                             raise ValueError("bad DC category")
                         diff = _jpeg_extend(br.bits(t), t) if t else 0
                         pred[ci] += diff
@@ -608,13 +442,13 @@ def _jpeg_scan_units(
                         _jpeg_ac_first(br, blk, huff_ac[ta], ss, se, al, state, zz)
                     else:  # AC refinement
                         _jpeg_ac_refine(br, blk, huff_ac[ta], ss, se, al, state, zz)
-                unit += 1
+                decoded += 1
         except (EOFError, ValueError, KeyError):
             # truncated/garbled interval (or a scan referencing an
             # undefined table): keep what decoded — fail-soft, like
             # real viewers; a short stream yields a partial image
             break
-    return unit
+    return decoded
 
 
 def _jpeg_ac_first(br, blk, table, ss, se, al, state, zz):
@@ -685,556 +519,40 @@ def _jpeg_ac_refine(br, blk, table, ss, se, al, state, zz):
         state["eobrun"] -= 1
 
 
-def _jpeg_lossless_scan(data: bytes):
-    """LOSSLESS JPEG (SOF3, T.81 Annex H): predictive Huffman decode.
-
-    Supports 1-3 components at 1×1 sampling, precision 2-16 bits, all
-    seven predictors, point transform, and restart intervals (the
-    prediction for each component's first sample after a restart — and
-    at scan start — is 2^(P-Pt-1)). Returns (height, width, channels)
-    uint8; precision > 8 scales down to the 8-bit output contract.
-    None for anything outside that envelope (fail-soft, same contract
-    as the DCT paths)."""
-    import numpy as np
-
-    huff_dc: dict[int, dict] = {}
-    frame = None  # (P, w, h, [comp ids])
-    restart_interval = 0
-    scan = None
-    i, n = 2, len(data)
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            i += 1
-            continue
-        marker = data[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if marker == 0xD9:
-            break
-        seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = data[i + 4 : i + 2 + seg_len]
-        if marker == 0xC4:  # DHT
-            p = 0
-            while p + 17 <= len(body):
-                tc, th = body[p] >> 4, body[p] & 0x0F
-                counts = body[p + 1 : p + 17]
-                nsym = sum(counts)
-                if p + 17 + nsym > len(body) or th > 3:
-                    return None
-                if tc == 0:  # lossless uses DC-class tables only
-                    huff_dc[th] = _jpeg_huff_table(
-                        counts, body[p + 17 : p + 17 + nsym]
-                    )
-                p += 17 + nsym
-        elif marker == 0xC3:  # SOF3
-            if len(body) < 6:
-                return None
-            prec = body[0]
-            h, w = struct.unpack(">HH", body[1:5])
-            nc = body[5]
-            if not (2 <= prec <= 16) or nc not in (1, 2, 3) or not (w and h):
-                return None
-            if w * h > 64_000_000 or len(body) < 6 + 3 * nc:
-                return None
-            ids = []
-            for c in range(nc):
-                hv = body[7 + 3 * c]
-                if hv != 0x11:  # subsampled lossless: out of envelope
-                    return None
-                ids.append(body[6 + 3 * c])
-            frame = (prec, w, h, ids)
-        elif marker in _JPEG_SOF or marker == 0xCC:  # other frames / DAC
-            return None
-        elif marker == 0xDD:  # DRI
-            if len(body) < 2:
-                return None
-            restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDA:  # SOS
-            if frame is None or len(body) < 4:
-                return None
-            ns = body[0]
-            if ns != len(frame[3]) or len(body) < 1 + 2 * ns + 3:
-                return None  # envelope: all components in one scan
-            tds = []
-            for s in range(ns):
-                if body[1 + 2 * s] != frame[3][s]:
-                    return None  # components in frame order only
-                tds.append(body[2 + 2 * s] >> 4)
-            pred_sel = body[1 + 2 * ns]  # Ss = predictor selector
-            pt = body[3 + 2 * ns] & 0x0F  # Al = point transform
-            if not (1 <= pred_sel <= 7):
-                return None
-            # entropy intervals (restart markers split them)
-            intervals: list[bytes] = []
-            cur = bytearray()
-            p = i + 2 + seg_len
-            while p < n:
-                b = data[p]
-                if b != 0xFF:
-                    cur.append(b)
-                    p += 1
-                    continue
-                m2 = data[p + 1] if p + 1 < n else 0xD9
-                if m2 == 0x00:
-                    cur.append(0xFF)
-                    p += 2
-                elif 0xD0 <= m2 <= 0xD7:
-                    intervals.append(bytes(cur))
-                    cur = bytearray()
-                    p += 2
-                else:
-                    break
-            intervals.append(bytes(cur))
-            scan = (tds, pred_sel, pt, intervals)
-            break
-        i += 2 + seg_len
-    if frame is None or scan is None:
-        return None
-
-    prec, w, h, ids = frame
-    tds, pred_sel, pt, intervals = scan
-    nc = len(ids)
-    if pt >= prec:
-        return None
-    default_pred = 1 << (prec - pt - 1)
-    planes = [np.zeros((h, w), dtype=np.int64) for _ in range(nc)]
-
-    mcu = 0  # one MCU = one sample per component (1x1 sampling)
-    n_mcus = w * h
-    per_interval = restart_interval or n_mcus
-    br = None
-    it = iter(intervals)
-    fresh = True
-    while mcu < n_mcus:
-        try:
-            br = _JpegBits(next(it))
-        except StopIteration:
-            break  # truncated stream: keep what decoded (fail-soft)
-        end = min(mcu + per_interval, n_mcus)
-        try:
-            for m in range(mcu, end):
-                y, x = divmod(m, w)
-                for ci in range(nc):
-                    s = _jpeg_huff_decode(br, huff_dc[tds[ci]])
-                    if s == 16:
-                        diff = 32768
-                    elif s:
-                        diff = _jpeg_extend(br.bits(s), s)
-                    else:
-                        diff = 0
-                    pl = planes[ci]
-                    if fresh and m == mcu:
-                        pred = default_pred
-                    elif y == 0:
-                        pred = pl[0, x - 1]
-                    elif x == 0:
-                        pred = pl[y - 1, 0]
-                    else:
-                        ra = pl[y, x - 1]
-                        rb = pl[y - 1, x]
-                        rc = pl[y - 1, x - 1]
-                        if pred_sel == 1:
-                            pred = ra
-                        elif pred_sel == 2:
-                            pred = rb
-                        elif pred_sel == 3:
-                            pred = rc
-                        elif pred_sel == 4:
-                            pred = ra + rb - rc
-                        elif pred_sel == 5:
-                            pred = ra + ((rb - rc) >> 1)
-                        elif pred_sel == 6:
-                            pred = rb + ((ra - rc) >> 1)
-                        else:
-                            pred = (ra + rb) >> 1
-                    pl[y, x] = (pred + diff) & 0xFFFF
-        except (IndexError, KeyError):
-            break  # truncated entropy data: fail-soft
-        mcu = end
-        fresh = True  # next interval restarts prediction
-    # reconstruct: undo point transform, scale precision to 8-bit
-    out = []
-    for pl in planes:
-        v = pl << pt
-        if prec > 8:
-            v = v >> (prec - 8)
-        elif prec < 8:
-            v = v << (8 - prec)
-        out.append(np.clip(v, 0, 255).astype(np.uint8))
-    return np.stack(out, axis=2)
+class _JpegScan(NamedTuple):
+    sel: list  # (component index, DC table, AC table) per scan component
+    ss: int  # spectral band start
+    se: int  # spectral band end
+    ah: int  # successive-approximation high bit
+    al: int  # successive-approximation low bit (point transform)
+    start: int  # offset of the first entropy-coded byte
+    stop: int  # offset of the marker that ends the entropy-coded data
+    restart: int  # DRI interval in effect for this scan (0 = none)
+    tables: tuple  # (DC, AC) Huffman tables or DAC conditioning, as defined here
 
 
-def _jpeg_lossless_arith_scan(data: bytes):
-    """LOSSLESS ARITHMETIC JPEG (SOF11, T.81 Annex H.2): predictive
-    decode with QM-coded differences under the two-dimensional (Da, Db)
-    conditioning model (sources/arithcode.decode_lossless_diff; DAC
-    defaults L=0, U=1). Same envelope as :func:`_jpeg_lossless_scan`:
-    1-3 components at 1×1 sampling, precision 2-16 bits, all seven
-    predictors, point transform, restart intervals (which re-init the
-    coder, the statistics, the difference-context history, and the
-    prediction). Returns (height, width, channels) uint8; None outside
-    the envelope (fail-soft)."""
-    import numpy as np
-
-    from . import arithcode as ARC
-
-    try:
-        dc_cond: dict[int, tuple[int, int]] = {}  # th -> (L, U)
-        frame = None  # (P, w, h, [comp ids])
-        restart_interval = 0
-        scan = None
-        i, n = 2, len(data)
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                i += 1
-                continue
-            marker = data[i + 1]
-            if marker == 0xFF:
-                i += 1
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                break
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if seg_len < 2 or i + 2 + seg_len > n:
-                return None
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xCC:  # DAC conditioning
-                p = 0
-                while p + 2 <= len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    v = body[p + 1]
-                    if tc == 0:
-                        dc_cond[th] = (v & 0x0F, v >> 4)  # (L, U)
-                    p += 2
-            elif marker == 0xCB:  # SOF11
-                if len(body) < 6:
-                    return None
-                prec = body[0]
-                h, w = struct.unpack(">HH", body[1:5])
-                nc = body[5]
-                if not (2 <= prec <= 16) or nc not in (1, 2, 3) or not (w and h):
-                    return None
-                if w * h > 64_000_000 or len(body) < 6 + 3 * nc:
-                    return None
-                ids = []
-                for c in range(nc):
-                    hv = body[7 + 3 * c]
-                    if hv != 0x11:  # subsampled lossless: out of envelope
-                        return None
-                    ids.append(body[6 + 3 * c])
-                frame = (prec, w, h, ids)
-            elif marker in _JPEG_SOF or marker == 0xC4:  # other frames
-                return None
-            elif marker == 0xDD:  # DRI
-                if len(body) < 2:
-                    return None
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS
-                if frame is None or len(body) < 4:
-                    return None
-                ns = body[0]
-                if ns != len(frame[3]) or len(body) < 1 + 2 * ns + 3:
-                    return None  # envelope: all components in one scan
-                tds = []
-                for s in range(ns):
-                    if body[1 + 2 * s] != frame[3][s]:
-                        return None  # components in frame order only
-                    tds.append(body[2 + 2 * s] >> 4)
-                pred_sel = body[1 + 2 * ns]  # Ss = predictor selector
-                pt = body[3 + 2 * ns] & 0x0F  # Al = point transform
-                if not (1 <= pred_sel <= 7):
-                    return None
-                scan = (tds, pred_sel, pt, i + 2 + seg_len)
-                break
-            i += 2 + seg_len
-        if frame is None or scan is None:
-            return None
-
-        prec, w, h, ids = frame
-        tds, pred_sel, pt, start = scan
-        nc = len(ids)
-        if pt >= prec:
-            return None
-        default_pred = 1 << (prec - pt - 1)
-        planes = [np.zeros((h, w), dtype=np.int64) for _ in range(nc)]
-        conds = [dc_cond.get(td, (0, 1)) for td in tds]
-
-        def fresh(pos):
-            # one statistics area PER CONDITIONING TABLE (components
-            # sharing a Td share adaptation, as in the sequential path)
-            return (
-                ARC.ArithDecoder(data, pos),
-                {td: bytearray(ARC.LOSSLESS_STAT_BINS) for td in tds},
-                [np.zeros(w, dtype=np.int64) for _ in range(nc)],
-            )
-
-        mcu = 0  # one MCU = one sample per component (1x1 sampling)
-        n_mcus = w * h
-        per_interval = restart_interval or n_mcus
-        dec, stats, diff_rows = fresh(start)
-        while mcu < n_mcus:
-            first = mcu
-            end = min(mcu + per_interval, n_mcus)
-            for m in range(mcu, end):
-                y, x = divmod(m, w)
-                for ci in range(nc):
-                    pl = planes[ci]
-                    if m == first:
-                        pred = default_pred
-                    elif y == 0:
-                        pred = pl[0, x - 1]
-                    elif x == 0:
-                        pred = pl[y - 1, 0]
-                    else:
-                        ra = pl[y, x - 1]
-                        rb = pl[y - 1, x]
-                        rc = pl[y - 1, x - 1]
-                        if pred_sel == 1:
-                            pred = ra
-                        elif pred_sel == 2:
-                            pred = rb
-                        elif pred_sel == 3:
-                            pred = rc
-                        elif pred_sel == 4:
-                            pred = ra + rb - rc
-                        elif pred_sel == 5:
-                            pred = ra + ((rb - rc) >> 1)
-                        elif pred_sel == 6:
-                            pred = rb + ((ra - rc) >> 1)
-                        else:
-                            pred = (ra + rb) >> 1
-                    dr = diff_rows[ci]
-                    da = 0 if (x == 0 or m == first) else int(dr[x - 1])
-                    db = int(dr[x])
-                    L, U = conds[ci]
-                    diff = ARC.decode_lossless_diff(
-                        dec, stats[tds[ci]], da, db, L, U
-                    )
-                    dr[x] = diff
-                    pl[y, x] = (pred + diff) & 0xFFFF
-            mcu = end
-            if mcu < n_mcus:
-                # skip to the RST marker, re-init everything
-                p = dec.pos
-                while p + 1 < n and not (
-                    data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-                ):
-                    p += 1
-                if p + 1 >= n:
-                    break  # truncated: keep what decoded (fail-soft)
-                dec, stats, diff_rows = fresh(p + 2)
-        # reconstruct: undo point transform, scale precision to 8-bit
-        out = []
-        for pl in planes:
-            v = pl << pt
-            if prec > 8:
-                v = v >> (prec - 8)
-            elif prec < 8:
-                v = v << (8 - prec)
-            out.append(np.clip(v, 0, 255).astype(np.uint8))
-        return np.stack(out, axis=2)
-    except Exception:
-        return None  # fail-closed, same contract as the other paths
-
-
-def _jpeg_exp2(plane, horiz: bool, vert: bool):
-    """T.81 J.1.1.2 reference-image expansion: doubled axes take the
-    input on even positions and the rounded two-point average on odd
-    positions (edge replicated)."""
-    import numpy as np
-
-    p = plane
-    if horiz:
-        h, w = p.shape
-        out = np.empty((h, 2 * w), dtype=p.dtype)
-        out[:, 0::2] = p
-        nxt = np.concatenate([p[:, 1:], p[:, -1:]], axis=1)
-        out[:, 1::2] = (p + nxt + 1) >> 1
-        p = out
-    if vert:
-        h, w = p.shape
-        out = np.empty((2 * h, w), dtype=p.dtype)
-        out[0::2, :] = p
-        nxt = np.concatenate([p[1:, :], p[-1:, :]], axis=0)
-        out[1::2, :] = (p + nxt + 1) >> 1
-        p = out
-    return p
-
-
-def _jpeg_hierarchical(data: bytes):
-    """HIERARCHICAL JPEG (DHP + frame pyramid, T.81 Annex J): decode a
-    sequence of frames — a non-differential first frame (SOF0/1/2)
-    followed by EXP reference expansions and differential correction
-    frames: DCT (SOF5/6) or LOSSLESS (SOF7 — corrections coded
-    directly, mod 2^16, making the pyramid reconstruction exact) —
-    into per-component reference planes. Arithmetic or non-differential
-    lossless members return None (fail-soft). 1-3 components; tables
-    persist across frames per the spec."""
+def _jpeg_parse(data: bytes):
+    """The one segment parse behind :func:`decode_jpeg_pixels`. Returns
+    ``(frame, qt, adobe_transform, scans)`` — frame = (w, h, comps,
+    progressive, arithmetic) with comps = [(comp_id, hi, vi, tq)], qt =
+    the DQT tables as 8x8 natural-order arrays, adobe_transform = the
+    APP14 color-transform flag (None when absent), scans = one
+    :class:`_JpegScan` per SOS — or None (or ``ValueError`` from the
+    marker walk) for malformed streams, and None for every coding
+    process outside SOF0/1/2/9 (metadata-only fallback).
+    Tables and the restart interval are snapshotted per scan, so a
+    redefinition between scans applies to the scans after it only."""
     import numpy as np
 
     qt: dict[int, "np.ndarray"] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
+    huff: tuple[dict, dict] = ({}, {})  # DC, AC Huffman tables by slot
+    cond: tuple[dict, dict] = ({}, {})  # DAC: DC (L, U), AC Kx by slot
+    frame = None
     restart_interval = 0
-    final = None  # DHP dims: (w, h, ncomp)
-    refs: list | None = None  # per-component int32 planes (unclamped)
-    cur = None  # (w, h, comps, progressive, differential, lossless)
-    cur_scans: list = []
-
-    def _lossless_diff_planes(w, h, nc, tds, intervals):
-        """Differential LOSSLESS frame (SOF7): each sample codes the
-        correction directly (no predictor, T.81 H.2 differential mode),
-        mod 2^16 — merging onto the reference is exact."""
-        planes = [np.zeros((h, w), dtype=np.int64) for _ in range(nc)]
-        n_mcus = w * h
-        per = restart_interval or n_mcus
-        it = iter(intervals)
-        mcu = 0
-        while mcu < n_mcus:
-            try:
-                br = _JpegBits(next(it))
-            except StopIteration:
-                break
-            end = min(mcu + per, n_mcus)
-            try:
-                for m in range(mcu, end):
-                    yy, xx = divmod(m, w)
-                    for ci in range(nc):
-                        s = _jpeg_huff_decode(br, huff_dc[tds[ci]])
-                        if s == 16:
-                            d = 32768
-                        elif s:
-                            d = _jpeg_extend(br.bits(s), s)
-                        else:
-                            d = 0
-                        planes[ci][yy, xx] = d & 0xFFFF
-            except (IndexError, KeyError):
-                break
-            mcu = end
-        return planes
-
-    def flush_frame():
-        """Decode the pending frame's scans and merge into refs."""
-        nonlocal refs, cur, cur_scans
-        if cur is None:
-            return True
-        if not cur_scans:
-            return False
-        w, h, comps, progressive, differential, lossless = cur
-        if lossless:
-            # only DIFFERENTIAL lossless inside a pyramid is supported
-            if not differential or refs is None or len(refs) != len(comps):
-                return False
-            sel, pss, _se, _ah, _al, intervals = cur_scans[0]
-            if len(sel) != len(comps) or pss != 0:
-                return False  # differential lossless codes Ss = 0
-            tds = [td for _, td, _ta in sel]
-            planes = _lossless_diff_planes(w, h, len(comps), tds, intervals)
-            merged = []
-            for r, d in zip(refs, planes):
-                if r.shape[0] < h or r.shape[1] < w:
-                    return False
-                merged.append(np.clip((r[:h, :w] + d) & 0xFFFF, 0, 255))
-            refs = merged
-            cur, cur_scans = None, []
-            return True
-        for c in comps:
-            if c[3] not in qt or not (1 <= c[1] <= 2 and 1 <= c[2] <= 2):
-                return False
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcus_x = -(-w // (8 * hmax))
-        mcus_y = -(-h // (8 * vmax))
-        grids, coeffs = [], []
-        for _, hi, vi, _tq in comps:
-            bw, bh = mcus_x * hi, mcus_y * vi
-            comp_w = -(-(w * hi) // hmax)
-            comp_h = -(-(h * vi) // vmax)
-            grids.append((bw, bh, -(-comp_w // 8), -(-comp_h // 8)))
-            coeffs.append(np.zeros((bh * bw, 64), dtype=np.int32))
-        decoded = 0
-        for scan in cur_scans:
-            decoded += _jpeg_scan_units(
-                scan, comps, grids, coeffs, huff_dc, huff_ac,
-                mcus_x, mcus_y, restart_interval, progressive,
-                differential=differential,
-            )
-        if decoded == 0:
-            return False
-        t_mat = _jpeg_idct_matrix()
-        planes = []
-        for ci, (_, hi, vi, tq) in enumerate(comps):
-            bw, bh = grids[ci][0], grids[ci][1]
-            deq = coeffs[ci].reshape(-1, 8, 8) * qt[tq][None, :, :]
-            spatial = np.einsum(
-                "ux,nuv,vy->nxy", t_mat, deq.astype(np.float64), t_mat
-            )
-            shift = 0 if differential else 128
-            blocks = (np.round(spatial) + shift).astype(np.int32)
-            plane = (
-                blocks.reshape(bh, bw, 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(bh * 8, bw * 8)
-            )
-            if hi < hmax:
-                plane = np.repeat(plane, hmax // hi, axis=1)
-            if vi < vmax:
-                plane = np.repeat(plane, vmax // vi, axis=0)
-            planes.append(plane[:h, :w])
-        # every stage's reference output clamps to the sample range
-        # (T.81 J: reference components are stored at 0..2^P-1)
-        if differential:
-            if refs is None or len(refs) != len(planes):
-                return False
-            merged = []
-            for r, d in zip(refs, planes):
-                if r.shape[0] < h or r.shape[1] < w:
-                    return False
-                merged.append(np.clip(r[:h, :w] + d, 0, 255))
-            refs = merged
-        else:
-            if refs is not None:
-                return False  # second non-differential frame: invalid
-            refs = [np.clip(p, 0, 255) for p in planes]
-        cur, cur_scans = None, []
-        return True
-
-    i, n = 2, len(data)
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            i += 1
-            continue
-        marker = data[i + 1]
-        if marker == 0xFF:
-            i += 1
-            continue
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            i += 2
-            continue
-        if marker == 0xD9:
-            break
-        seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = data[i + 4 : i + 2 + seg_len]
-        if marker == 0xDE:  # DHP: final dims, SOF syntax, no entropy
-            if len(body) < 6 or body[0] != 8:
-                return None
-            fh, fw = struct.unpack(">HH", body[1:5])
-            nc = body[5]
-            if nc not in (1, 3) or not (fw and fh) or fw * fh > 64_000_000:
-                return None
-            final = (fw, fh, nc)
-        elif marker == 0xDB:  # DQT (persists across frames)
+    adobe_transform = None
+    scans: list[_JpegScan] = []
+    for marker, body, start, stop in _jpeg_markers(data):
+        if marker == 0xDB:  # DQT
             p = 0
             while p < len(body):
                 pq, tq = body[p] >> 4, body[p] & 0x0F
@@ -1251,7 +569,7 @@ def _jpeg_hierarchical(data: bytes):
                 tbl[_JPEG_ZIGZAG] = raw
                 qt[tq] = tbl.reshape(8, 8)
                 p += m
-        elif marker == 0xC4:  # DHT (persists)
+        elif marker == 0xC4:  # DHT
             p = 0
             while p + 17 <= len(body):
                 tc, th = body[p] >> 4, body[p] & 0x0F
@@ -1260,16 +578,24 @@ def _jpeg_hierarchical(data: bytes):
                 if p + 17 + nsym > len(body) or th > 3:
                     return None
                 table = _jpeg_huff_table(counts, body[p + 17 : p + 17 + nsym])
-                (huff_ac if tc else huff_dc)[th] = table
+                huff[1 if tc else 0][th] = table
                 p += 17 + nsym
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC5, 0xC6, 0xC7):  # pyramid frames
-            if not flush_frame():
-                return None
+        elif marker == 0xCC:  # DAC conditioning
+            p = 0
+            while p + 2 <= len(body):
+                tc, th = body[p] >> 4, body[p] & 0x0F
+                v = body[p + 1]
+                if tc == 0:
+                    cond[0][th] = (v & 0x0F, v >> 4)  # (L, U)
+                else:
+                    cond[1][th] = v  # Kx
+                p += 2
+        elif marker in (0xC0, 0xC1, 0xC2, 0xC9):
             if len(body) < 6 or body[0] != 8:
                 return None
             h, w = struct.unpack(">HH", body[1:5])
             nc = body[5]
-            if nc not in (1, 3) or len(body) < 6 + 3 * nc or not (w and h):
+            if nc not in (1, 3, 4) or len(body) < 6 + 3 * nc or not (w and h):
                 return None
             if w * h > 64_000_000:
                 return None
@@ -1278,35 +604,23 @@ def _jpeg_hierarchical(data: bytes):
                 cid = body[6 + 3 * c]
                 hv = body[7 + 3 * c]
                 comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-            cur = (
-                w, h, comps,
-                marker in (0xC2, 0xC6),
-                marker in (0xC5, 0xC6, 0xC7),
-                marker == 0xC7,
-            )
-        elif marker in _JPEG_SOF or marker == 0xCC:
-            return None  # non-diff lossless / arithmetic members, DAC
-        elif marker == 0xDF:  # EXP: expand the reference image
-            if not flush_frame():
-                return None
-            if refs is None or len(body) < 1:
-                return None
-            eh, ev = body[0] >> 4, body[0] & 0x0F
-            if eh > 1 or ev > 1:
-                return None
-            refs = [_jpeg_exp2(r, bool(eh), bool(ev)) for r in refs]
+            frame = (w, h, comps, marker == 0xC2, marker == 0xC9)
+        elif marker in _JPEG_SOF:  # lossless, hierarchical, SOF10/11
+            return None
+        elif marker == 0xEE:  # APP14 (Adobe): color-transform flag
+            if len(body) >= 12 and body[:5] == b"Adobe":
+                adobe_transform = body[11]
         elif marker == 0xDD:  # DRI
             if len(body) < 2:
                 return None
             restart_interval = struct.unpack(">H", body[:2])[0]
-        elif marker == 0xDA:  # SOS for the current frame
-            if cur is None or len(body) < 4:
+        elif marker == 0xDA:  # SOS
+            if frame is None or len(body) < 4:
                 return None
             ns = body[0]
-            comps = cur[2]
-            if not (1 <= ns <= len(comps)) or len(body) < 1 + 2 * ns + 3:
+            if not (1 <= ns <= len(frame[2])) or len(body) < 1 + 2 * ns + 3:
                 return None
-            ids = [c[0] for c in comps]
+            ids = [c[0] for c in frame[2]]
             sel = []
             for s in range(ns):
                 cs = body[1 + 2 * s]
@@ -1318,230 +632,101 @@ def _jpeg_hierarchical(data: bytes):
             ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
             if ss > se or se > 63:
                 return None
-            intervals: list[bytes] = []
-            curb = bytearray()
-            p = i + 2 + seg_len
-            while p < n:
-                b = data[p]
-                if b != 0xFF:
-                    curb.append(b)
-                    p += 1
-                    continue
-                m2 = data[p + 1] if p + 1 < n else 0xD9
-                if m2 == 0x00:
-                    curb.append(0xFF)
-                    p += 2
-                elif 0xD0 <= m2 <= 0xD7:
-                    intervals.append(bytes(curb))
-                    curb = bytearray()
-                    p += 2
-                else:
-                    break
-            intervals.append(bytes(curb))
-            cur_scans.append((sel, ss, se, ah, al, intervals))
-            i = p
-            continue
-        i += 2 + seg_len
-    if not flush_frame() or refs is None or final is None:
+            if frame[3]:  # progressive scan-header rules (T.81 G.1)
+                if ss == 0 and se != 0:
+                    return None  # DC scans carry only coefficient 0
+                if ss > 0 and ns != 1:
+                    return None  # AC scans are single-component
+            elif (ss, se, ah, al) != (0, 63, 0, 0):
+                return None  # sequential scans span the full band
+            # (missing tables surface as a fail-soft KeyError at decode
+            # time, matching the truncation contract)
+            tables = tuple(dict(t) for t in (cond if frame[4] else huff))
+            scans.append(_JpegScan(
+                sel, ss, se, ah, al, start, stop, restart_interval, tables
+            ))
+    if frame is None or not scans:
         return None
-    fw, fh, nc = final
-    if len(refs) != nc:
-        return None
-    for r in refs:
-        if r.shape[0] < fh or r.shape[1] < fw:
-            return None
-    planes = [
-        np.clip(r[:fh, :fw], 0, 255).astype(np.uint8) for r in refs
-    ]
-    if nc == 1:
-        return planes[0][:, :, None].copy()
-    y, cb, cr = (p.astype(np.float64) for p in planes)
-    r = y + 1.402 * (cr - 128)
-    g = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-    b = y + 1.772 * (cb - 128)
-    return np.clip(
-        np.round(np.stack([r, g, b], axis=2)), 0, 255
-    ).astype(np.uint8)
+    return frame, qt, adobe_transform, scans
+
+
+def _jpeg_arith_scan(data, scan, order, coeffs) -> int:
+    """Arithmetic entropy stage of one sequential (SOF9) scan: QM coder
+    + Annex F conditioning models (sources/arithcode.py), DAC defaults
+    L=0, U=1, Kx=5; the coder and every statistics area re-init at the
+    scan start and at each restart marker. Returns the number of
+    decoded units."""
+    from . import arithcode as ARC
+
+    dc_cond, ac_cond = scan.tables
+    nc = len(coeffs)
+    zz = _JPEG_ZIGZAG
+    n = len(data)
+
+    def fresh(pos):
+        return (
+            ARC.ArithDecoder(data, pos),
+            {td: bytearray(ARC.DC_STAT_BINS) for _, td, _ in scan.sel},
+            {ta: bytearray(ARC.AC_STAT_BINS) for _, _, ta in scan.sel},
+            bytearray([ARC.FIXED_BIN]),
+            [0] * nc,  # DC conditioning category per component
+            [0] * nc,  # DC predictor per component
+        )
+
+    dec, dstats, astats, fixed, dctx, pred = fresh(scan.start)
+    decoded = 0
+    for unit in order:
+        if scan.restart and decoded and decoded % scan.restart == 0:
+            # skip to the RST marker, re-init coder + ALL stats
+            p = dec.pos
+            while p + 1 < n and not (
+                data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
+            ):
+                p += 1
+            if p + 1 >= n:
+                raise ValueError("missing restart marker")
+            dec, dstats, astats, fixed, dctx, pred = fresh(p + 2)
+        for ci, td, ta, idx in unit:
+            L, U = dc_cond.get(td, (0, 1))
+            pred[ci] += ARC.decode_dc(dec, dstats[td], dctx, ci, L, U)
+            blk = [0] * 64
+            blk[0] = pred[ci]
+            ARC.decode_ac(dec, astats[ta], fixed, blk, ac_cond.get(ta, 5))
+            coeffs[ci][idx, zz] = blk
+        decoded += 1
+    return decoded
 
 
 def decode_jpeg_pixels(data: bytes):
     """JPEG pixel decode (T.81, public spec), pure Python entropy
-    decode + numpy dequant/IDCT: baseline/extended-sequential (SOF0/1)
-    AND progressive (SOF2 — spectral selection, successive
-    approximation, DC+AC refinement scans, EOB runs), 8-bit samples,
-    grayscale or 3-component YCbCr, sampling factors 1-2 with chroma
-    upsampling, restart markers, 8/16-bit DQT, per-scan DHT
-    redefinition; plus LOSSLESS (SOF3) predictive frames via
-    :func:`_jpeg_lossless_scan`, HIERARCHICAL pyramids (DHP + EXP +
-    SOF5/6 differential frames via :func:`_jpeg_hierarchical`) and
-    4-COMPONENT (CMYK/YCCK) frames — returned as 4 channels exactly as
-    the codestream encodes them (APP14 transform 2 un-rotates YCCK
-    back to CMY; ink interpretation is producer-dependent and stays
-    with the caller); plus ARITHMETIC entropy coding in all three
-    shapes — sequential (SOF9) and progressive (SOF10) via
-    :func:`_jpeg_arith` (QM coder + Annex F/G conditioning,
-    sources/arithcode.py) and lossless (SOF11) via
-    :func:`_jpeg_lossless_arith_scan` (Annex H.2 two-dimensional
-    difference conditioning). Only differential frames outside a
-    hierarchical pyramid return None (metadata-only fallback).
-    Returns (height, width, channels) uint8.
+    decode + numpy dequant/IDCT: baseline/extended-sequential (SOF0/1),
+    progressive (SOF2 — spectral selection, successive approximation,
+    DC+AC refinement scans, EOB runs) and sequential ARITHMETIC (SOF9 —
+    QM coder + Annex F conditioning, sources/arithcode.py); 8-bit
+    samples, grayscale, 3-component YCbCr or 4-component CMYK/YCCK —
+    returned as 4 channels exactly as the codestream encodes them
+    (APP14 transform 2 un-rotates YCCK back to CMY; ink interpretation
+    is producer-dependent and stays with the caller); sampling factors
+    1-2 with chroma upsampling, restart markers, 8/16-bit DQT, per-scan
+    table redefinition. Every other coding process — lossless (SOF3/11),
+    hierarchical (SOF5-7/13-15) and progressive arithmetic (SOF10) —
+    returns None (metadata-only fallback; :func:`decode_jpeg` still
+    reports its dimensions). Returns (height, width, channels) uint8.
 
+    One segment parse (:func:`_jpeg_parse`) serves both entropy stages.
     Per-block work is one einsum over all blocks per component; only
-    the inherently serial Huffman bitstream walks in Python — fine for
+    the inherently serial entropy decode walks in Python — fine for
     the thumbnail/preview sizes a curation pipeline decodes, and the
     64 MP bound caps untrusted headers."""
     import numpy as np
 
     try:
-        if len(data) < 4 or data[:2] != b"\xff\xd8":
+        parsed = _jpeg_parse(data)
+        if parsed is None:
             return None
-        qt: dict[int, "np.ndarray"] = {}
-        huff_dc: dict[int, dict] = {}
-        huff_ac: dict[int, dict] = {}
-        frame = None  # (w, h, [(comp_id, hi, vi, tq), ...], progressive)
-        restart_interval = 0
-        adobe_transform = None  # APP14 color-transform flag (None=absent)
-        scans = []  # (sel, Ss, Se, Ah, Al, intervals)
-
-        i, n = 2, len(data)
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                i += 1
-                continue
-            marker = data[i + 1]
-            if marker == 0xFF:
-                i += 1
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                break
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if seg_len < 2 or i + 2 + seg_len > n:
-                return None
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                p = 0
-                while p < len(body):
-                    pq, tq = body[p] >> 4, body[p] & 0x0F
-                    p += 1
-                    m = 64 * (2 if pq else 1)
-                    if p + m > len(body) or tq > 3:
-                        return None
-                    raw = (
-                        np.frombuffer(body[p : p + m], dtype=">u2")
-                        if pq
-                        else np.frombuffer(body[p : p + m], dtype=np.uint8)
-                    ).astype(np.int32)
-                    tbl = np.zeros(64, dtype=np.int32)
-                    tbl[_JPEG_ZIGZAG] = raw
-                    qt[tq] = tbl.reshape(8, 8)
-                    p += m
-            elif marker == 0xC4:  # DHT (tables may be redefined per scan)
-                p = 0
-                while p + 17 <= len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    counts = body[p + 1 : p + 17]
-                    nsym = sum(counts)
-                    if p + 17 + nsym > len(body) or th > 3:
-                        return None
-                    table = _jpeg_huff_table(counts, body[p + 17 : p + 17 + nsym])
-                    (huff_ac if tc else huff_dc)[th] = table
-                    p += 17 + nsym
-            elif marker in (0xC0, 0xC1, 0xC2):  # sequential / progressive
-                if len(body) < 6 or body[0] != 8:
-                    return None
-                h, w = struct.unpack(">HH", body[1:5])
-                nc = body[5]
-                if nc not in (1, 3, 4) or len(body) < 6 + 3 * nc or not (w and h):
-                    return None
-                if w * h > 64_000_000:
-                    return None
-                comps = []
-                for c in range(nc):
-                    cid = body[6 + 3 * c]
-                    hv = body[7 + 3 * c]
-                    comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-                frame = (w, h, comps, marker == 0xC2)
-            elif marker == 0xC3:  # lossless: own predictive scan walk
-                return _jpeg_lossless_scan(data)
-            elif marker == 0xDE:  # DHP: hierarchical pyramid walk
-                return _jpeg_hierarchical(data)
-            elif marker in (0xC9, 0xCA):  # arithmetic: own walker
-                return _jpeg_arith(data)
-            elif marker == 0xCB:  # lossless arithmetic: own walker
-                return _jpeg_lossless_arith_scan(data)
-            elif marker in _JPEG_SOF:  # stray differential frames
-                return None  # metadata-only
-            elif marker == 0xEE:  # APP14 (Adobe): color-transform flag
-                if len(body) >= 12 and body[:5] == b"Adobe":
-                    adobe_transform = body[11]
-            elif marker == 0xDD:  # DRI
-                if len(body) < 2:
-                    return None
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS
-                if frame is None or len(body) < 4:
-                    return None
-                ns = body[0]
-                if not (1 <= ns <= len(frame[2])) or len(body) < 1 + 2 * ns + 3:
-                    return None
-                ids = [c[0] for c in frame[2]]
-                sel = []
-                for s in range(ns):
-                    cs = body[1 + 2 * s]
-                    if cs not in ids:
-                        return None
-                    td, ta = body[2 + 2 * s] >> 4, body[2 + 2 * s] & 0x0F
-                    sel.append((ids.index(cs), td, ta))
-                ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-                ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-                if ss > se or se > 63:
-                    return None
-                if frame[3]:  # progressive scan-header rules (T.81 G.1)
-                    if ss == 0 and se != 0:
-                        return None  # DC scans carry only coefficient 0
-                    if ss > 0 and ns != 1:
-                        return None  # AC scans are single-component
-                elif (ss, se, ah) != (0, 63, 0):
-                    return None  # sequential scans span the full band
-                # (missing Huffman tables surface as a fail-soft KeyError
-                # at decode time, matching the truncation contract)
-                # gather the entropy intervals for this scan
-                intervals: list[bytes] = []
-                cur = bytearray()
-                p = i + 2 + seg_len
-                while p < n:
-                    b = data[p]
-                    if b != 0xFF:
-                        cur.append(b)
-                        p += 1
-                        continue
-                    m2 = data[p + 1] if p + 1 < n else 0xD9
-                    if m2 == 0x00:
-                        cur.append(0xFF)
-                        p += 2
-                    elif 0xD0 <= m2 <= 0xD7:
-                        intervals.append(bytes(cur))
-                        cur = bytearray()
-                        p += 2
-                    else:
-                        break
-                intervals.append(bytes(cur))
-                scans.append((list(sel), ss, se, ah, al, intervals))
-                i = p
-                continue
-            i += 2 + seg_len
-        if not scans or frame is None:
-            return None
-
-        w, h, comps, progressive = frame
-        for hi, vi in ((c[1], c[2]) for c in comps):
-            if not (1 <= hi <= 2 and 1 <= vi <= 2):
-                return None
-        for c in comps:
-            if c[3] not in qt:
+        (w, h, comps, progressive, arithmetic), qt, adobe_transform, scans = parsed
+        for _, hi, vi, tq in comps:
+            if not (1 <= hi <= 2 and 1 <= vi <= 2) or tq not in qt:
                 return None
 
         hmax = max(c[1] for c in comps)
@@ -1562,10 +747,13 @@ def decode_jpeg_pixels(data: bytes):
 
         decoded_units = 0
         for scan in scans:
-            decoded_units += _jpeg_scan_units(
-                scan, comps, grids, coeffs, huff_dc, huff_ac,
-                mcus_x, mcus_y, restart_interval, progressive,
-            )
+            order = _jpeg_scan_order(scan.sel, comps, grids, mcus_x, mcus_y)
+            if arithmetic:
+                decoded_units += _jpeg_arith_scan(data, scan, order, coeffs)
+            else:
+                decoded_units += _jpeg_huffman_scan(
+                    data, scan, order, coeffs, progressive
+                )
         if decoded_units == 0:
             return None
 
@@ -1578,263 +766,10 @@ def decode_jpeg_pixels(data: bytes):
         return None
 
 
-def _jpeg_arith(data: bytes):
-    """ARITHMETIC-coded JPEG pixel decode — sequential (SOF9) AND
-    progressive (SOF10): QM coder + Annex F/G conditioning models
-    (sources/arithcode.py), DAC conditioning segments (defaults L=0,
-    U=1, Kx=5), restart markers (full stats + coder re-init per
-    interval; every scan re-inits regardless), progressive scan
-    dispatch (DC first/refine, per-component AC first/refine with
-    spectral selection + successive approximation), then the shared
-    dequant/IDCT/color assembly. Lossless arithmetic (SOF11) routes to
-    :func:`_jpeg_lossless_arith_scan` instead."""
-    import numpy as np
-
-    from . import arithcode as ARC
-
-    try:
-        qt: dict[int, "np.ndarray"] = {}
-        dc_cond: dict[int, tuple[int, int]] = {}  # th -> (L, U)
-        ac_cond: dict[int, int] = {}  # th -> Kx
-        frame = None
-        restart_interval = 0
-        adobe_transform = None
-        scans = []  # (sel, entropy_start, dc_cond, ac_cond, dri)
-
-        i, n = 2, len(data)
-        while i + 4 <= n:
-            if data[i] != 0xFF:
-                i += 1
-                continue
-            marker = data[i + 1]
-            if marker == 0xFF:
-                i += 1
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            if marker == 0xD9:
-                break
-            seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-            if seg_len < 2 or i + 2 + seg_len > n:
-                return None
-            body = data[i + 4 : i + 2 + seg_len]
-            if marker == 0xDB:  # DQT
-                p = 0
-                while p < len(body):
-                    pq, tq = body[p] >> 4, body[p] & 0x0F
-                    p += 1
-                    m = 64 * (2 if pq else 1)
-                    if p + m > len(body) or tq > 3:
-                        return None
-                    raw = (
-                        np.frombuffer(body[p : p + m], dtype=">u2")
-                        if pq
-                        else np.frombuffer(body[p : p + m], dtype=np.uint8)
-                    ).astype(np.int32)
-                    tbl = np.zeros(64, dtype=np.int32)
-                    tbl[_JPEG_ZIGZAG] = raw
-                    qt[tq] = tbl.reshape(8, 8)
-                    p += m
-            elif marker == 0xCC:  # DAC conditioning
-                p = 0
-                while p + 2 <= len(body):
-                    tc, th = body[p] >> 4, body[p] & 0x0F
-                    v = body[p + 1]
-                    if tc == 0:
-                        dc_cond[th] = (v & 0x0F, v >> 4)  # (L, U)
-                    else:
-                        ac_cond[th] = v  # Kx
-                    p += 2
-            elif marker in (0xC9, 0xCA):  # sequential / progressive arith
-                if len(body) < 6 or body[0] != 8:
-                    return None
-                h, w = struct.unpack(">HH", body[1:5])
-                nc = body[5]
-                if nc not in (1, 3, 4) or len(body) < 6 + 3 * nc or not (w and h):
-                    return None
-                if w * h > 64_000_000:
-                    return None
-                comps = []
-                for c in range(nc):
-                    cid = body[6 + 3 * c]
-                    hv = body[7 + 3 * c]
-                    comps.append((cid, hv >> 4, hv & 0x0F, body[8 + 3 * c]))
-                frame = (w, h, comps, marker == 0xCA)
-            elif marker in _JPEG_SOF:
-                return None  # progressive/lossless arithmetic: metadata-only
-            elif marker == 0xEE:
-                if len(body) >= 12 and body[:5] == b"Adobe":
-                    adobe_transform = body[11]
-            elif marker == 0xDD:
-                if len(body) < 2:
-                    return None
-                restart_interval = struct.unpack(">H", body[:2])[0]
-            elif marker == 0xDA:  # SOS (interleaved when ns > 1,
-                # per-component block walk when ns == 1); every scan
-                # re-inits the coder and its statistics
-                if frame is None or len(body) < 4:
-                    return None
-                ns = body[0]
-                if not (1 <= ns <= len(frame[2])) or len(body) < 1 + 2 * ns + 3:
-                    return None
-                ids = [c[0] for c in frame[2]]
-                sel = []
-                for s in range(ns):
-                    cs = body[1 + 2 * s]
-                    if cs not in ids:
-                        return None
-                    td, ta = body[2 + 2 * s] >> 4, body[2 + 2 * s] & 0x0F
-                    sel.append((ids.index(cs), td, ta))
-                ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-                ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-                if frame[3]:  # progressive scan-header rules (G.1)
-                    if ss > se or se > 63:
-                        return None
-                    if ss == 0 and se != 0:
-                        return None  # DC scans carry only coefficient 0
-                    if ss > 0 and ns != 1:
-                        return None  # AC scans are single-component
-                elif (ss, se, ah) != (0, 63, 0):
-                    return None  # sequential scans span the full band
-                scans.append((sel, i + 2 + seg_len, dict(dc_cond),
-                              dict(ac_cond), restart_interval,
-                              (ss, se, ah, al)))
-                # skip the entropy data: markers terminate it, 0xFF00
-                # is a stuffed data byte, RSTn continues the scan
-                p = i + 2 + seg_len
-                while p + 1 < n:
-                    if data[p] != 0xFF:
-                        p += 1
-                    elif data[p + 1] == 0x00 or data[p + 1] == 0xFF:
-                        p += 2 if data[p + 1] == 0x00 else 1
-                    elif 0xD0 <= data[p + 1] <= 0xD7:
-                        p += 2
-                    else:
-                        break
-                i = p
-                continue
-            i += 2 + seg_len
-        if frame is None or not scans:
-            return None
-
-        w, h, comps, _progressive = frame
-        for hi, vi in ((c[1], c[2]) for c in comps):
-            if not (1 <= hi <= 2 and 1 <= vi <= 2):
-                return None
-        for c in comps:
-            if c[3] not in qt:
-                return None
-
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        mcus_x = -(-w // (8 * hmax))
-        mcus_y = -(-h // (8 * vmax))
-        grids = []
-        coeffs = []
-        for _, hi, vi, _tq in comps:
-            bw, bh = mcus_x * hi, mcus_y * vi
-            comp_w = -(-(w * hi) // hmax)
-            comp_h = -(-(h * vi) // vmax)
-            grids.append((bw, bh, -(-comp_w // 8), -(-comp_h // 8)))
-            coeffs.append(np.zeros((bh * bw, 64), dtype=np.int32))
-
-        nc = len(comps)
-        zz = _JPEG_ZIGZAG
-
-        for sel, pos, sdc_cond, sac_cond, dri, (ss, se, ah, al) in scans:
-
-            def fresh(start):
-                dec = ARC.ArithDecoder(data, start)
-                dstats = {td: bytearray(ARC.DC_STAT_BINS) for _, td, _ in sel}
-                astats = {ta: bytearray(ARC.AC_STAT_BINS) for _, _, ta in sel}
-                fixed = bytearray([ARC.FIXED_BIN])
-                return dec, dstats, astats, fixed, [0] * nc, [0] * nc
-
-            def decode_block(dec, dstats, astats, fixed, dctx, pred,
-                             ci, td, ta, idx):
-                """One block of THIS scan: sequential scans decode
-                DC+AC; progressive scans dispatch on (ss, ah)."""
-                row = coeffs[ci][idx]
-                if ss == 0:
-                    if ah == 0:  # DC first (sequential when se == 63)
-                        L, U = sdc_cond.get(td, (0, 1))
-                        diff = ARC.decode_dc(dec, dstats[td], dctx, ci, L, U)
-                        pred[ci] += diff
-                        row[0] = pred[ci] << al
-                    else:  # DC refinement: one fixed-bin bit
-                        if ARC.decode_dc_refine(dec, fixed):
-                            row[0] |= 1 << al
-                    if se == 0:
-                        return
-                Kx = sac_cond.get(ta, 5)
-                lo = max(ss, 1)
-                if ah == 0:  # AC first (or the sequential AC band)
-                    blk_zz = [0] * 64
-                    ARC.decode_ac(
-                        dec, astats[ta], fixed, blk_zz, Kx, lo, se, al
-                    )
-                    row[zz[lo : se + 1]] = blk_zz[lo : se + 1]
-                else:  # AC refinement over the band, in place
-                    blk_zz = [0] * 64
-                    blk_zz[lo : se + 1] = [
-                        int(v) for v in row[zz[lo : se + 1]]
-                    ]
-                    ARC.decode_ac_refine(
-                        dec, astats[ta], fixed, blk_zz, lo, se, al
-                    )
-                    row[zz[lo : se + 1]] = blk_zz[lo : se + 1]
-
-            def restart(dec):
-                # skip to the RST marker, re-init coder + ALL stats
-                p = dec.pos
-                while p + 1 < n and not (
-                    data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-                ):
-                    p += 1
-                if p + 1 >= n:
-                    raise ValueError("missing restart marker")
-                return fresh(p + 2)
-
-            state = fresh(pos)
-            since_restart = 0
-            if len(sel) == 1:
-                # non-interleaved: walk the component's TRUE block grid
-                ci, td, ta = sel[0]
-                bwb, _bh, cbw, cbh = grids[ci]
-                for unit in range(cbw * cbh):
-                    if dri and since_restart == dri:
-                        state = restart(state[0])
-                        since_restart = 0
-                    by, bx = divmod(unit, cbw)
-                    decode_block(*state, ci, td, ta, by * bwb + bx)
-                    since_restart += 1
-            else:
-                for mcu in range(mcus_x * mcus_y):
-                    if dri and since_restart == dri:
-                        state = restart(state[0])
-                        since_restart = 0
-                    my, mx = divmod(mcu, mcus_x)
-                    for ci, td, ta in sel:
-                        _, hi, vi, _tq = comps[ci]
-                        bwb = grids[ci][0]
-                        for by in range(vi):
-                            for bx in range(hi):
-                                idx = (my * vi + by) * bwb + (mx * hi + bx)
-                                decode_block(*state, ci, td, ta, idx)
-                    since_restart += 1
-
-        return _jpeg_reconstruct(
-            w, h, comps, grids, coeffs, qt, adobe_transform, hmax, vmax
-        )
-    except Exception:
-        return None  # fail-closed, same contract as the Huffman path
-
-
 def _jpeg_reconstruct(w, h, comps, grids, coeffs, qt, adobe_transform,
                       hmax, vmax):
     """Dequant + IDCT + upsample + color-transform assembly shared by
-    the Huffman and arithmetic (SOF9) sequential paths."""
+    the Huffman and arithmetic (SOF9) entropy stages."""
     import numpy as np
 
     t_mat = _jpeg_idct_matrix()
@@ -2205,8 +1140,8 @@ def _flac_info_samples(data: bytes):
 def decode_image_pixels(data: bytes):
     """(format, pixels (h, w, c) uint8 | None) for any recognized image
     payload — the dispatch image_features applies inline (PNG decodes
-    every legal layout; BMP/GIF/JPEG variants outside the pixel
-    decoders return metadata-format with None pixels). Never raises."""
+    every legal layout; GIF, and BMP/JPEG variants outside the pixel
+    decoders, return their format with None pixels). Never raises."""
     info = decode_image(data)
     if info is None:
         return None, None
@@ -2215,76 +1150,18 @@ def decode_image_pixels(data: bytes):
         img = decode_png_pixels(data)
     elif info.format == "bmp":
         img = decode_bmp_pixels(data)
-    elif info.format == "gif":
-        img = decode_gif_pixels(data)
     elif info.format == "jpeg":
         img = decode_jpeg_pixels(data)
     return info.format, img
 
 
-# MPEG-1 Layer III (ISO 11172-3) header tables: bitrate kbps by index,
-# sample rate by index
-_MP3_BITRATES = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128,
-                 160, 192, 224, 256, 320)
-_MP3_RATES = (44100, 48000, 32000)
-
-
-def decode_mp3(data: bytes) -> AudioInfo | None:
-    """MPEG-1 Layer III METADATA-ONLY decode: ID3v2 skip + frame-header
-    walk (sync, bitrate/sample-rate tables, padding, mode) → channels,
-    sample rate, sample count (1152/frame) and duration. No PCM
-    synthesis (the polyphase window is out of container scope — same
-    boundary as h264 video), so rms/peak are 0. None for non-MP3 bytes;
-    lax on truncation (keeps the valid frame prefix). Never raises."""
-    pos = 0
-    n = len(data)
-    if n >= 10 and data[:3] == b"ID3":
-        size = 0
-        for b in data[6:10]:
-            size = (size << 7) | (b & 0x7F)  # syncsafe
-        pos = 10 + size
-    frames = 0
-    rate = channels = 0
-    while pos + 4 <= n:
-        h = struct.unpack(">I", data[pos : pos + 4])[0]
-        if (h >> 21) != 0x7FF:
-            break
-        if (h >> 19) & 3 != 3 or (h >> 17) & 3 != 1:
-            break  # not MPEG-1 Layer III
-        br_idx = (h >> 12) & 0xF
-        sr_idx = (h >> 10) & 3
-        if br_idx in (0, 15) or sr_idx == 3:
-            break  # free-format/invalid
-        bitrate = _MP3_BITRATES[br_idx]
-        rate = _MP3_RATES[sr_idx]
-        padding = (h >> 9) & 1
-        mode = (h >> 6) & 3
-        channels = 1 if mode == 3 else 2
-        flen = 144 * bitrate * 1000 // rate + padding
-        if flen < 4 or pos + flen > n:
-            break  # truncated final frame: keep the prefix
-        frames += 1
-        pos += flen
-    if not frames:
-        return None
-    n_samples = frames * 1152
-    return AudioInfo(
-        "mp3", channels, rate, 0, n_samples,
-        int(n_samples * 1000 // rate) if rate else 0, 0.0, 0.0,
-    )
-
-
 def decode_audio(data: bytes) -> AudioInfo | None:
-    """Audio metadata + loudness for any supported codec: RIFF/WAV
-    (PCM int/float), FLAC (full decode) or MP3 (header metadata).
-    None for anything else — never raises."""
+    """Audio metadata + loudness for RIFF/WAV (PCM int/float) or FLAC
+    (full decode). None for anything else — never raises."""
     if len(data) >= 4 and data[:4] == b"fLaC":
         out = _flac_info_samples(data)
         return out[0] if out else None
-    wav = decode_wav(data)
-    if wav is not None:
-        return wav
-    return decode_mp3(data)
+    return decode_wav(data)
 
 
 def decode_audio_samples(data: bytes):

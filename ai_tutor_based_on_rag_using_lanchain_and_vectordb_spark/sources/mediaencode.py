@@ -7,14 +7,13 @@ Scope: 8-bit baseline (SOF0), progressive (SOF2, four-stage scan
 script with successive approximation), or sequential ARITHMETIC
 (SOF9, QM coder per T.81 Annex D/F via sources/arithcode.py, DAC
 conditioning at spec defaults), grayscale / YCbCr 4:4:4 /
-4:2:0 / CMYK-YCCK (APP14), LOSSLESS (SOF3, all predictors, 2-16 bit,
-restarts) and two-level HIERARCHICAL pyramids (DHP + EXP + SOF5
-differential, grayscale or YCbCr), near-lossless all-ones quantization
-so round-trip error is DCT rounding only, optional restart intervals.
+4:2:0 / CMYK-YCCK (APP14), near-lossless all-ones quantization so
+round-trip error is DCT rounding only, optional restart intervals.
 Huffman tables are a valid canonical layout (symbols 0-127 at 8 bits,
 128-255 at 9 bits) rather than the Annex K defaults — simpler to
 construct, and it exercises the decoder's generic DHT handling instead
-of a hard-coded table."""
+of a hard-coded table. Also: the MJPEG MP4 muxer and an uncompressed
+BMP writer."""
 
 from __future__ import annotations
 
@@ -31,8 +30,6 @@ _HUFF_SYMBOLS = bytes(range(256))
 # strict decoders (system libjpeg) reject DC tables defining symbols
 # above 15. All 16 get length-8 canonical codes, i.e. code == symbol —
 # exactly what _code() emits — so the entropy bitstream is unchanged.
-# (The lossless SOF3 encoder keeps its own 17-symbol table for SSSS=16;
-# strict-decoder interop there is moot — libjpeg has no lossless mode.)
 _HUFF_DC_COUNTS = bytes([0] * 7 + [16] + [0] * 8)
 _HUFF_DC_SYMBOLS = bytes(range(16))
 
@@ -74,13 +71,9 @@ def _emit_coeff(bw: _BitWriter, v: int, t: int) -> None:
 _T_MAT = _jpeg_idct_matrix()
 
 
-def _encode_block(
-    bw: _BitWriter, block: np.ndarray, pred: int, shift: float = 128.0
-) -> int:
-    """block: 8x8 spatial uint8/int. Returns the new DC predictor.
-    ``shift=0`` codes difference images (hierarchical SOF5 frames)."""
-    coeff = _T_MAT @ (block.astype(np.float64) - shift) @ _T_MAT.T
-    q = np.round(coeff).astype(np.int64).reshape(64)[_JPEG_ZIGZAG]
+def _encode_block(bw: _BitWriter, block: np.ndarray, pred: int) -> int:
+    """block: 8x8 spatial uint8/int. Returns the new DC predictor."""
+    q = _quantize_block(block)
     dc = int(q[0])
     diff = dc - pred
     t = _category(diff)
@@ -234,11 +227,12 @@ def encode_jpeg(
     DC first at Al=1, DC refinement, per-component AC first at Al=1,
     per-component AC refinement — exercising spectral selection,
     successive approximation and EOB runs. ``arithmetic=True`` writes
-    arithmetic entropy coding (QM coder per T.81 Annexes D/F/G,
-    sources/arithcode.py) with a DAC conditioning segment at the spec
-    defaults (L=0, U=1, Kx=5): SOF9 (extended sequential) alone, or —
-    combined with ``progressive`` — SOF10 with the SAME four-stage
-    scan script (every scan re-inits the coder and statistics)."""
+    SOF9 (extended sequential) with arithmetic entropy coding (QM coder
+    per T.81 Annexes D/F, sources/arithcode.py) and a DAC conditioning
+    segment at the spec defaults (L=0, U=1, Kx=5); combined with
+    ``progressive`` (SOF10) it raises ``ValueError``."""
+    if arithmetic and progressive:
+        raise ValueError("progressive arithmetic JPEG (SOF10) is not supported")
     gray = img.ndim == 2
     cmyk = img.ndim == 3 and img.shape[2] == 4
     h, w = img.shape[:2]
@@ -296,10 +290,7 @@ def encode_jpeg(
     sof = bytearray(struct.pack(">BHHB", 8, h, w, len(planes)))
     for ci, (hi, vi) in enumerate(samplings):
         sof += bytes([ci + 1, (hi << 4) | vi, 0])
-    if arithmetic:
-        sof_marker = 0xCA if progressive else 0xC9
-    else:
-        sof_marker = 0xC2 if progressive else 0xC0
+    sof_marker = 0xC9 if arithmetic else (0xC2 if progressive else 0xC0)
     out += _seg(sof_marker, bytes(sof))
     if arithmetic:
         # DAC: DC table 0 conditioning (U<<4)|L = 0x10, AC table 0 Kx=5
@@ -307,92 +298,6 @@ def encode_jpeg(
     else:
         out += _seg(0xC4, bytes([0x00]) + _HUFF_DC_COUNTS + _HUFF_DC_SYMBOLS)  # DC 0
         out += _seg(0xC4, bytes([0x10]) + _HUFF_COUNTS + _HUFF_SYMBOLS)  # AC 0
-
-    if arithmetic and progressive:
-        from . import arithcode as ARC
-
-        qblocks = [
-            [_quantize_block(b) for b in arr] for arr, _ in blocks
-        ]
-
-        def sos_header(comp_ids, ss, se, ah, al):
-            hdr = bytearray([len(comp_ids)])
-            for cid in comp_ids:
-                hdr += bytes([cid + 1, 0x00])
-            hdr += bytes([ss, se, (ah << 4) | al])
-            return _seg(0xDA, bytes(hdr))
-
-        def mcu_blocks():
-            for mcu in range(mcus_x * mcus_y):
-                my, mx = divmod(mcu, mcus_x)
-                for ci, (hi, vi) in enumerate(samplings):
-                    bwb = blocks[ci][1]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            yield ci, qblocks[ci][
-                                (my * vi + by) * bwb + (mx * hi + bx)
-                            ]
-
-        all_ids = list(range(len(planes)))
-        # scan 1: DC first, interleaved, Al=1 (floor-shift transform,
-        # predictors tracked in the shifted domain)
-        out += sos_header(all_ids, 0, 0, 0, 1)
-        enc = ARC.ArithEncoder()
-        dstats = bytearray(ARC.DC_STAT_BINS)
-        dctx, pred = [0] * len(planes), [0] * len(planes)
-        for ci, q in mcu_blocks():
-            v = int(q[0]) >> 1
-            ARC.encode_dc(enc, dstats, dctx, ci, v - pred[ci], 0, 1)
-            pred[ci] = v
-        out += enc.finish()
-        # scan 2: DC refinement — one fixed-bin bit per block
-        out += sos_header(all_ids, 0, 0, 1, 0)
-        enc = ARC.ArithEncoder()
-        fixed = bytearray([ARC.FIXED_BIN])
-        for _ci, q in mcu_blocks():
-            ARC.encode_dc_refine(enc, fixed, int(q[0]) & 1)
-        out += enc.finish()
-        # per component: AC first (Al=1) then AC refinement, walking
-        # the TRUE block grid (non-interleaved scans)
-        for ci, (hi, vi) in enumerate(samplings):
-            bwb = blocks[ci][1]
-            comp_w = -(-(w * hi) // hmax)
-            comp_h = -(-(h * vi) // vmax)
-            cbw, cbh = -(-comp_w // 8), -(-comp_h // 8)
-            order = [
-                qblocks[ci][by * bwb + bx]
-                for by in range(cbh)
-                for bx in range(cbw)
-            ]
-            out += sos_header([ci], 1, 63, 0, 1)
-            enc = ARC.ArithEncoder()
-            astats = bytearray(ARC.AC_STAT_BINS)
-            fixed = bytearray([ARC.FIXED_BIN])
-            for q in order:
-                # AC point transform truncates toward zero (T.81 G.1.2.1)
-                shifted = [
-                    int(q[k]) // 2 if q[k] >= 0 else -((-int(q[k])) // 2)
-                    for k in range(64)
-                ]
-                ARC.encode_ac(enc, astats, fixed, shifted, 5, ss=1, se=63)
-            out += enc.finish()
-            out += sos_header([ci], 1, 63, 1, 0)
-            enc = ARC.ArithEncoder()
-            astats = bytearray(ARC.AC_STAT_BINS)
-            fixed = bytearray([ARC.FIXED_BIN])
-            for q in order:
-                full = [int(q[k]) for k in range(64)]
-                # what the decoder holds after the Al=1 pass, at full
-                # scale: trunc(v/2) * 2 with sign
-                prev = [
-                    (v // 2 if v >= 0 else -((-v) // 2)) * 2 for v in full
-                ]
-                ARC.encode_ac_refine(
-                    enc, astats, fixed, prev, full, 1, 63, 0
-                )
-            out += enc.finish()
-        out += b"\xff\xd9"
-        return bytes(out)
 
     if arithmetic:
         from . import arithcode as ARC
@@ -491,12 +396,10 @@ def encode_jpeg(
         # per component: AC first (Al=1) then AC refinement — walking
         # the component's TRUE block grid (≠ the MCU-padded grid when
         # subsampled), as non-interleaved scans must
-        hmax2 = max(s[0] for s in samplings)
-        vmax2 = max(s[1] for s in samplings)
         for ci, (hi, vi) in enumerate(samplings):
             bwb = blocks[ci][1]
-            comp_w = -(-(w * hi) // hmax2)
-            comp_h = -(-(h * vi) // vmax2)
+            comp_w = -(-(w * hi) // hmax)
+            comp_h = -(-(h * vi) // vmax)
             cbw, cbh = -(-comp_w // 8), -(-comp_h // 8)
             order = [
                 qblocks[ci][by * bwb + bx]
@@ -561,8 +464,8 @@ def encode_mjpeg_mp4(frames: list, frame_ms: int = 500, codec: bytes = b"jpeg") 
     the stsc mapping is non-trivial, stts at a constant frame duration.
     Frame payloads are standalone JPEGs laid into mdat. Used by the
     multimodal self-check gate and the decoder tests; a non-default
-    ``codec`` synthesizes compressed-codec-shaped tracks for the
-    pluggable frame-codec seam tests."""
+    ``codec`` synthesizes a track whose samples sample_frames does not
+    decode (its timing-stub path)."""
     timescale = 1000
 
     def full(btype, payload):
@@ -608,326 +511,6 @@ def encode_mjpeg_mp4(frames: list, frame_ms: int = 500, codec: bytes = b"jpeg") 
     moov = build_moov(offsets)
     assert len(moov) == moov_len
     return ftyp + moov + _mp4_box(b"mdat", b"".join(frames))
-
-
-def encode_lossless_jpeg(
-    img: np.ndarray,
-    predictor: int = 1,
-    precision: int | None = None,
-    pt: int = 0,
-    restart_interval: int = 0,
-    arithmetic: bool = False,
-) -> bytes:
-    """LOSSLESS JPEG (T.81 Annex H) reference encoder for the decoder
-    tests: ``img`` is (h, w) or (h, w, C≤3) uint8/uint16; components
-    interleave at 1×1 sampling. Huffman (SOF3) by default: one DC-class
-    table (17 difference categories at code length 5 — canonical, the
-    all-ones code stays unused as the spec requires).
-    ``arithmetic=True`` writes SOF11 instead: QM-coded differences
-    under the Annex H.2 two-dimensional (Da, Db) conditioning
-    (sources/arithcode.encode_lossless_diff), DAC defaults L=0, U=1.
-    ``pt`` point-transform shifts samples right before prediction;
-    ``restart_interval`` (in MCUs) emits RSTn markers and resets
-    prediction (and, under arithmetic, the coder, statistics, and the
-    difference-context history), exercising the decoder's restart
-    path."""
-    arr = np.asarray(img)
-    h, w = arr.shape[:2]
-    planes = [arr] if arr.ndim == 2 else [arr[:, :, c] for c in range(arr.shape[2])]
-    nc = len(planes)
-    if precision is None:
-        precision = 16 if arr.dtype.itemsize > 1 else 8
-    shifted = [
-        (p.astype(np.int64) >> pt) for p in planes
-    ]
-    default_pred = 1 << (precision - pt - 1)
-
-    out = bytearray(b"\xff\xd8")
-    if arithmetic:
-        out += _seg(0xCC, bytes([0x00, 0x10]))  # DAC: DC table 0, L=0 U=1
-    else:
-        counts = bytes([0, 0, 0, 0, 17] + [0] * 11)
-        out += _seg(0xC4, bytes([0x00]) + counts + bytes(range(17)))
-    sof = bytes([precision]) + struct.pack(">HH", h, w) + bytes([nc])
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += _seg(0xCB if arithmetic else 0xC3, sof)
-    if restart_interval:
-        out += _seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    sos += bytes([predictor, 0, pt])
-    out += _seg(0xDA, sos)
-
-    if arithmetic:
-        from . import arithcode as ARC
-
-        n_mcus = h * w
-        per = restart_interval or n_mcus
-        rst = 0
-        mcu = 0
-        while mcu < n_mcus:
-            enc = ARC.ArithEncoder()
-            stats = bytearray(ARC.LOSSLESS_STAT_BINS)
-            # per-component Da/Db history resets with the interval
-            diff_rows = [np.zeros(w, dtype=np.int64) for _ in range(nc)]
-            first = mcu
-            end = min(mcu + per, n_mcus)
-            for m in range(mcu, end):
-                y, x = divmod(m, w)
-                for ci in range(nc):
-                    pl = shifted[ci]
-                    if m == first:
-                        pred = default_pred
-                    elif y == 0:
-                        pred = pl[0, x - 1]
-                    elif x == 0:
-                        pred = pl[y - 1, 0]
-                    else:
-                        ra, rb, rc = pl[y, x - 1], pl[y - 1, x], pl[y - 1, x - 1]
-                        pred = [
-                            ra, rb, rc, ra + rb - rc,
-                            ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                            (ra + rb) >> 1,
-                        ][predictor - 1]
-                    m16 = int(pl[y, x] - pred) & 0xFFFF
-                    diff = m16 - 65536 if m16 >= 32768 else m16
-                    dr = diff_rows[ci]
-                    da = 0 if (x == 0 or m == first) else int(dr[x - 1])
-                    db = int(dr[x])  # zeros until a row exists above
-                    ARC.encode_lossless_diff(enc, stats, da, db, diff, 0, 1)
-                    dr[x] = diff
-            mcu = end
-            out += enc.finish()
-            if mcu < n_mcus:
-                out += bytes([0xFF, 0xD0 + (rst & 7)])
-                rst += 1
-        out += b"\xff\xd9"
-        return bytes(out)
-
-    bw = _BitWriter()
-    n_mcus = h * w
-    per = restart_interval or n_mcus
-    rst = 0
-    mcu = 0
-    while mcu < n_mcus:
-        end = min(mcu + per, n_mcus)
-        for m in range(mcu, end):
-            y, x = divmod(m, w)
-            for ci in range(nc):
-                pl = shifted[ci]
-                if m == mcu:
-                    pred = default_pred
-                elif y == 0:
-                    pred = pl[0, x - 1]
-                elif x == 0:
-                    pred = pl[y - 1, 0]
-                else:
-                    ra, rb, rc = pl[y, x - 1], pl[y - 1, x], pl[y - 1, x - 1]
-                    pred = [
-                        ra, rb, rc, ra + rb - rc,
-                        ra + ((rb - rc) >> 1), rb + ((ra - rc) >> 1),
-                        (ra + rb) >> 1,
-                    ][predictor - 1]
-                m16 = int(pl[y, x] - pred) & 0xFFFF
-                if m16 == 32768:
-                    bw.write(16, 5)  # SSSS=16: diff 32768, no extra bits
-                    continue
-                signed = m16 - 65536 if m16 > 32768 else m16
-                s = int(abs(signed)).bit_length()
-                bw.write(s, 5)
-                _emit_coeff(bw, signed, s)
-        mcu = end
-        if mcu < n_mcus:
-            bw.flush()
-            out += bw.out + bytes([0xFF, 0xD0 + (rst & 7)])
-            rst += 1
-            bw = _BitWriter()
-    bw.flush()
-    out += bw.out + b"\xff\xd9"
-    return bytes(out)
-
-
-def _recon_plane(p: np.ndarray, bw_blocks: int, bh_blocks: int, h: int, w: int):
-    """The exact plane the DECODER holds after a non-differential
-    sequential frame of ``p`` with the all-ones quantizer: per-block
-    round(DCT(p-128)) → round(IDCT)+128, clamped, cropped."""
-    blocks = _plane_blocks(p, bw_blocks, bh_blocks)
-    coeff = _T_MAT @ (blocks.astype(np.float64) - 128.0) @ _T_MAT.T
-    q = np.round(coeff)
-    spatial = _T_MAT.T @ q @ _T_MAT
-    recon = np.clip(np.round(spatial) + 128, 0, 255).astype(np.int32)
-    plane = (
-        recon.reshape(bh_blocks, bw_blocks, 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(bh_blocks * 8, bw_blocks * 8)
-    )
-    return plane[:h, :w]
-
-
-def _write_seq_frame(out: bytearray, marker: int, planes, h: int, w: int,
-                     shift: float) -> None:
-    """One interleaved sequential frame (1×1 sampling, shared DC/AC
-    table 0) for the hierarchical pyramid: SOFn + SOS + entropy data."""
-    nc = len(planes)
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += _seg(marker, sof)
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    out += _seg(0xDA, sos + bytes([0, 63, 0]))
-    bw_blocks, bh_blocks = -(-w // 8), -(-h // 8)
-    blocks = [_plane_blocks(p, bw_blocks, bh_blocks) for p in planes]
-    bw = _BitWriter()
-    preds = [0] * nc
-    for bi in range(bw_blocks * bh_blocks):
-        for ci in range(nc):
-            preds[ci] = _encode_block(bw, blocks[ci][bi], preds[ci], shift=shift)
-    bw.flush()
-    out += bw.out
-
-
-def _write_prog_diff_frame(out: bytearray, planes, h: int, w: int) -> None:
-    """SOF6 (progressive DIFFERENTIAL) frame: interleaved DC scan then
-    one full-band AC scan per component — exercises the decoder's
-    progressive scan machinery on difference data (no level shift)."""
-    nc = len(planes)
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += _seg(0xC6, sof)
-    bw_blocks, bh_blocks = -(-w // 8), -(-h // 8)
-    qblocks = []
-    for p in planes:
-        blocks = _plane_blocks(p, bw_blocks, bh_blocks)
-        coeff = _T_MAT @ blocks.astype(np.float64) @ _T_MAT.T  # shift 0
-        qblocks.append(
-            [np.round(c).astype(np.int64).reshape(64)[_JPEG_ZIGZAG] for c in coeff]
-        )
-    # scan 1: DC, interleaved, Ss=Se=0, Ah=Al=0
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    out += _seg(0xDA, sos + bytes([0, 0, 0]))
-    bw = _BitWriter()
-    preds = [0] * nc
-    for bi in range(bw_blocks * bh_blocks):
-        for ci in range(nc):
-            dc = int(qblocks[ci][bi][0])
-            diff = dc - preds[ci]
-            preds[ci] = dc
-            t = _category(diff)
-            _emit_symbol(bw, t)
-            _emit_coeff(bw, diff, t)
-    bw.flush()
-    out += bw.out
-    # scans 2..: per-component full AC band, first pass
-    for ci in range(nc):
-        out += _seg(0xDA, bytes([1, ci + 1, 0x00, 1, 63, 0]))
-        bw = _BitWriter()
-        _encode_ac_first(bw, qblocks[ci], 0)
-        bw.flush()
-        out += bw.out
-
-
-def _write_lossless_diff_frame(out: bytearray, diffs, h: int, w: int) -> None:
-    """SOF7 (differential LOSSLESS) frame: every correction sample is
-    coded directly — category + extend bits, mod 2^16, no predictor
-    (T.81 H.2 differential mode) — so the pyramid reconstructs the
-    input EXACTLY. Reuses the universal table 0 (symbols 0-16 exist)."""
-    nc = len(diffs)
-    sof = struct.pack(">BHHB", 8, h, w, nc)
-    for ci in range(nc):
-        sof += bytes([ci + 1, 0x11, 0])
-    out += _seg(0xC7, sof)
-    sos = bytes([nc])
-    for ci in range(nc):
-        sos += bytes([ci + 1, 0x00])
-    out += _seg(0xDA, sos + bytes([0, 0, 0]))  # Ss=0: no predictor
-    bw = _BitWriter()
-    for m in range(h * w):
-        y, x = divmod(m, w)
-        for ci in range(nc):
-            m16 = int(diffs[ci][y, x]) & 0xFFFF
-            if m16 == 32768:
-                _emit_symbol(bw, 16)
-                continue
-            signed = m16 - 65536 if m16 > 32768 else m16
-            s = int(abs(signed)).bit_length()
-            _emit_symbol(bw, s)
-            _emit_coeff(bw, signed, s)
-    bw.flush()
-    out += bw.out
-
-
-def encode_hierarchical_jpeg(img: np.ndarray, progressive_diff: bool = False,
-                             lossless_diff: bool = False) -> bytes:
-    """HIERARCHICAL JPEG (T.81 Annex J) reference encoder for the
-    decoder tests: a two-level pyramid — half-resolution SOF0 base
-    frame, EXP ×2 expansion, SOF5 differential correction frame coded
-    against the decoder-exact upsampled reconstruction (the base
-    frame's reconstruction is recomputed with the decoder's own
-    arithmetic and expanded with the same J.1.1.2 filter, so the
-    correction is exact up to DCT rounding). Grayscale (h, w) or RGB
-    (h, w, 3) — color pyramids operate in YCbCr component space, the
-    space the decoder accumulates references in. ``progressive_diff``
-    writes the correction as a SOF6 progressive differential frame
-    (DC scan + per-component AC scans) instead of SOF5 sequential."""
-    from . import mediadecode as MD
-
-    h, w = img.shape[:2]
-    h2, w2 = -(-h // 2), -(-w // 2)
-    arr = img.astype(np.float64)
-    pad = np.pad(
-        arr,
-        ((0, h2 * 2 - h), (0, w2 * 2 - w)) + (((0, 0),) if arr.ndim == 3 else ()),
-        mode="edge",
-    )
-    if arr.ndim == 2:
-        full_planes = [arr]
-        base_planes = [np.round(pad.reshape(h2, 2, w2, 2).mean(axis=(1, 3)))]
-    else:
-        def ycbcr(a):
-            r, g, b = a[:, :, 0], a[:, :, 1], a[:, :, 2]
-            return [
-                np.round(0.299 * r + 0.587 * g + 0.114 * b),
-                np.round(128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b),
-                np.round(128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b),
-            ]
-        full_planes = ycbcr(arr)
-        base_rgb = pad.reshape(h2, 2, w2, 2, 3).mean(axis=(1, 3))
-        base_planes = ycbcr(base_rgb)
-    base_planes = [np.clip(p, 0, 255) for p in base_planes]
-    full_planes = [np.clip(p, 0, 255).astype(np.int32) for p in full_planes]
-    nc = len(full_planes)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    dhp = struct.pack(">BHHB", 8, h, w, nc)
-    for ci in range(nc):
-        dhp += bytes([ci + 1, 0x11, 0])
-    out += _seg(0xDE, dhp)
-    out += _seg(0xDB, bytes([0x00]) + bytes([1] * 64))  # DQT 0: all ones
-    out += _seg(0xC4, bytes([0x00]) + _HUFF_DC_COUNTS + _HUFF_DC_SYMBOLS)  # DC 0
-    out += _seg(0xC4, bytes([0x10]) + _HUFF_COUNTS + _HUFF_SYMBOLS)  # AC 0
-    _write_seq_frame(out, 0xC0, base_planes, h2, w2, shift=128.0)
-    out += _seg(0xDF, bytes([0x11]))  # EXP: expand both dimensions
-    bwb, bhb = -(-w2 // 8), -(-h2 // 8)
-    diffs = []
-    for ci in range(nc):
-        ref = _recon_plane(base_planes[ci], bwb, bhb, h2, w2)
-        up = MD._jpeg_exp2(ref, True, True)
-        diffs.append(full_planes[ci] - up[:h, :w])
-    if lossless_diff:
-        _write_lossless_diff_frame(out, diffs, h, w)
-    elif progressive_diff:
-        _write_prog_diff_frame(out, diffs, h, w)
-    else:
-        _write_seq_frame(out, 0xC5, diffs, h, w, shift=0.0)
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def encode_bmp(img: "np.ndarray", top_down: bool = False) -> bytes:

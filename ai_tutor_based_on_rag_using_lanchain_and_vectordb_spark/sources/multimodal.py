@@ -4,31 +4,24 @@ with typed metadata, processed by Arrow-batched stages over
 
 Decode status: image metadata (PNG/GIF/BMP/JPEG dimensions + channels)
 and image PIXELS — PNG at every legal depth incl. Adam7, JPEG baseline,
-progressive, LOSSLESS (SOF3), HIERARCHICAL (DHP pyramid + SOF5/6
-differential frames) and 4-component CMYK/YCCK, first-frame GIF (LZW),
-BMP 24/32/16-bit/paletted/RLE — plus WAV audio (header + PCM stats at
-all integer/float widths), FLAC compressed audio (sources/flac.py —
-full RFC 9639 decode: fixed + LPC prediction, Rice/Rice2 residuals,
-all four stereo modes) and MJPEG frame extraction from MP4 sample
-tables are REAL pure-stdlib+numpy decoders (``mediadecode.py`` — same
-move as minidecode.py for PDF/DOCX). Arithmetic-coded JPEG (SOF9/10/11,
-sources/arithcode.py, libjpeg-cross-validated) and MPEG-1 video
-elementary streams (sources/mpeg1.py — real I/P-picture decode with
-motion compensation) are REAL too. The deterministic fake is only the
-fallback for unrecognized codecs, and ``strict=True`` raises on those
-instead. Still stubbed: MP4-contained modern codec samples (h264/vp9
-etc. need a decoder library this container doesn't ship; see the
-register_frame_codec seam below) — the stub either raises
-NotImplementedError (strict mode) or produces a deterministic fake
-derived from the bytes — the Spark-side plumbing (schemas, batch
-iteration, partitioning, output shapes) is real and tested.
-
-Compressed video is an EXTENSION POINT, not a dead end: the sample
-tables already yield each stored frame's exact byte range + timestamp
-(mediadecode.mp4_video_track), so plugging a real codec in is one
-``register_frame_codec("avc1", decode_fn)`` call — the sampling,
-timing, fan-out, and downstream image-feature plumbing are shared with
-the built-in MJPEG path. See FRAME_CODECS below.
+progressive, sequential-arithmetic (SOF9, sources/arithcode.py,
+libjpeg-cross-validated) and 4-component CMYK/YCCK, BMP
+24/32/16-bit/paletted — plus WAV audio (header + PCM stats at all
+integer/float widths), FLAC compressed audio (sources/flac.py — full
+RFC 9639 decode: fixed + LPC prediction, Rice/Rice2 residuals, all four
+stereo modes) and MJPEG frame extraction from MP4 sample tables are
+REAL pure-stdlib+numpy decoders (``mediadecode.py`` — same move as
+minidecode.py for PDF/DOCX). MPEG-1 video elementary and program
+streams (sources/mpeg1.py, sources/mpegps.py — real I/P/B-picture
+decode with motion compensation) are REAL too. GIF, RLE BMP and the
+other JPEG coding processes (lossless, hierarchical, progressive
+arithmetic) keep real metadata with no pixels. The deterministic fake
+is only the fallback for unrecognized codecs, and ``strict=True``
+raises on those instead. Still stubbed: MP4-contained modern codec
+samples (h264/vp9 etc. need a decoder library this container doesn't
+ship) — sample_frames keeps their real timing with stub payload
+slices, or raises in strict mode; the Spark-side plumbing (schemas,
+batch iteration, partitioning, output shapes) is real and tested.
 
 Design for 100 TB: binary payloads stay in Arrow record batches
 end-to-end (no per-row Python), metadata lives in a MAP column so
@@ -141,12 +134,13 @@ def image_features(assets: DataFrame, strict: bool = False) -> DataFrame:
     Dimensions/channels come from the REAL stdlib header decoders
     (PNG/GIF/BMP/JPEG, mediadecode.py). PIXELS are decoded for real for
     PNG (IDAT inflate + unfilter, every legal depth, Adam7), JPEG —
-    baseline and progressive (Huffman entropy decode + dequant + IDCT +
-    chroma upsample), first-frame GIF (LZW) and every documented BMP
-    layout, producing per-channel mean/std plus a histogram embedding —
-    ``pixels_real=True`` marks those rows. Variants outside those
-    decoders (arithmetic-coded JPEG) keep real metadata with null pixel
-    stats, the deterministic stub embedding and ``pixels_real=False``. Bytes no
+    baseline, progressive and sequential arithmetic (entropy decode +
+    dequant + IDCT + chroma upsample) — and uncompressed BMP layouts,
+    producing per-channel mean/std plus a histogram embedding —
+    ``pixels_real=True`` marks those rows. GIF and the variants outside
+    those decoders (RLE BMP; lossless, hierarchical and progressive-
+    arithmetic JPEG) keep real metadata with null pixel stats, the
+    deterministic stub embedding and ``pixels_real=False``. Bytes no
     decoder recognizes raise in ``strict`` mode, as does a recognized
     PNG whose pixel decode fails (corrupt stream — every legal PNG
     depth and Adam7 interlace decode for real); else they fall back to
@@ -170,18 +164,14 @@ def image_features(assets: DataFrame, strict: bool = False) -> DataFrame:
                                 "run with strict=False to keep metadata only"
                             )
                     elif fmt == "bmp":
-                        # uncompressed 24/32-bit DIBs decode for real;
-                        # RLE/paletted fall back to metadata-only (even
-                        # in strict mode — unlike PNG, a BMP variant
-                        # isn't evidence of corruption)
+                        # uncompressed DIBs decode for real; RLE falls
+                        # back to metadata-only (even in strict mode —
+                        # unlike PNG, a BMP variant isn't evidence of
+                        # corruption)
                         img = MD.decode_bmp_pixels(data)
-                    elif fmt == "gif":
-                        # first frame, LZW + palette; malformed streams
-                        # fall back to metadata-only
-                        img = MD.decode_gif_pixels(data)
                     elif fmt == "jpeg":
-                        # baseline/progressive/lossless/CMYK decode;
-                        # arithmetic-coded falls back to metadata-only
+                        # SOF0/1/2/9 decode; the other coding processes
+                        # fall back to metadata-only
                         img = MD.decode_jpeg_pixels(data)
                 elif strict:
                     raise NotImplementedError(
@@ -339,27 +329,6 @@ def video_metadata(assets: DataFrame, strict: bool = False) -> DataFrame:
     ).mapInPandas(run, VIDEO_METADATA_SCHEMA)
 
 
-# ----------------------------------------------- pluggable frame codecs
-#
-# fourcc -> callable(sample_bytes) -> decodable image payload (bytes
-# that image_features can pixel-decode, e.g. a JPEG/PNG/BMP) or None
-# (undecodable sample: strict mode raises, lax mode falls back to the
-# timing-only stub for that asset). The built-in MJPEG path is the
-# identity transcode — stored samples ARE standalone JPEGs. A real
-# h264/vp9 integration registers its decoder here and inherits the
-# sampling/timing/fan-out plumbing unchanged. Registered callables are
-# captured BY VALUE into each sample_frames plan (so they ship with the
-# serialized task closure to executors) and must be picklable.
-
-FRAME_CODECS: dict[str, "callable"] = {c: bytes for c in MD.MJPEG_CODECS}
-
-
-def register_frame_codec(fourcc: str, decode_fn) -> None:
-    """Register ``decode_fn(sample_bytes) -> bytes | None`` for an MP4
-    stsd fourcc. Registration affects plans built afterwards."""
-    FRAME_CODECS[fourcc] = decode_fn
-
-
 def sample_frames(
     assets: DataFrame,
     every_ms: int = 1000,
@@ -373,20 +342,17 @@ def sample_frames(
     stts, mediadecode.mp4_video_track) give each stored frame's byte
     range and timestamp, the sample nearest below each ``every_ms``
     tick is emitted, and the payload is a standalone JPEG that
-    image_features can pixel-decode downstream. Tracks whose fourcc has
-    a registered frame codec (:func:`register_frame_codec`) follow the
-    same path with the codec's transcode applied per sample. MPEG-1
-    elementary streams get REAL compressed-video decode
-    (sources/mpeg1.py): every picture is reconstructed through the
-    motion-compensation chain and the sampled ones are emitted as BMP
-    payloads. Other MP4s keep real TIMING from the mvhd duration with
-    stub payload slices (h264-class codecs need a decoder library this
-    container doesn't ship); unrecognized containers raise in strict
-    mode, else fall back to byte-slicing with synthetic timestamps.
-    ``max_frames``
-    bounds the per-asset fan-out: headers are untrusted, and a corrupt
-    timescale must not let one row explode a task."""
-    codecs = dict(FRAME_CODECS)  # captured by value into the closure
+    image_features can pixel-decode downstream. MPEG-1 elementary
+    streams get REAL compressed-video decode (sources/mpeg1.py): every
+    picture is reconstructed through the motion-compensation chain and
+    the sampled ones are emitted as BMP payloads. Other MP4s keep real
+    TIMING from the mvhd duration with stub payload slices (h264-class
+    codecs need a decoder library this container doesn't ship); in
+    strict mode a video track whose fourcc has no decoder raises, as do
+    unrecognized containers, which otherwise fall back to byte-slicing
+    with synthetic timestamps. ``max_frames`` bounds the
+    per-asset fan-out: headers are untrusted, and a corrupt timescale
+    must not let one row explode a task."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -394,7 +360,7 @@ def sample_frames(
             for r in pdf.itertuples(index=False):
                 data = bytes(r.content) if r.content is not None else b""
                 track = MD.mp4_video_track(data)
-                if track is not None and track.codec in codecs:
+                if track is not None and track.codec in MD.MJPEG_CODECS:
                     # real frames: nearest stored sample at/below each
                     # tick. Iterate SAMPLES, not ticks — timestamps come
                     # from an untrusted stts table, and a huge duration
@@ -411,31 +377,23 @@ def sample_frames(
                             picked.append(si)
                         if len(picked) >= max_frames:
                             break
-                    transcode = codecs[track.codec]
-                    decoded = []
-                    for si in picked:
-                        s = track.samples[si]
-                        payload = transcode(data[s.offset : s.offset + s.size])
-                        if payload is None:
-                            if strict:
-                                raise NotImplementedError(
-                                    f"frame codec {track.codec!r} failed on a "
-                                    f"sample of asset {r.asset_id}"
-                                )
-                            decoded = None  # lax: whole asset -> stub path
-                            break
-                        decoded.append((s.ts_ms, payload))
-                    if decoded is not None:
-                        for i, (ts, payload) in enumerate(decoded):
-                            rows.append(
-                                {
-                                    "asset_id": r.asset_id,
-                                    "frame_no": i,
-                                    "frame_ts_ms": ts,
-                                    "frame": payload,
-                                }
-                            )
-                        continue
+                    for i, si in enumerate(picked):
+                        s = samples[si]
+                        rows.append(
+                            {
+                                "asset_id": r.asset_id,
+                                "frame_no": i,
+                                "frame_ts_ms": s.ts_ms,
+                                "frame": data[s.offset : s.offset + s.size],
+                            }
+                        )
+                    continue
+                if track is not None and strict:
+                    raise NotImplementedError(
+                        f"no decoder for video codec {track.codec!r} in asset "
+                        f"{r.asset_id} (frames decode for MJPEG tracks); "
+                        "run with strict=False for timing-stub frames"
+                    )
                 m1_es = data
                 if PS.is_mpeg_ps(data):
                     # program stream (.mpg): demux the video PES

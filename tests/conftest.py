@@ -16,7 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # pytest run was cut off at ~22% of the ~75-minute full suite — an
 # invisible-failure risk). Two tiers, both measured (r14, per-test
 # --durations over the whole suite):
-#   - media decoders / codec cross-validation / fuzzers (~282 tests),
+#   - media decoders / codec cross-validation / fuzzers (~247 tests),
 #   - the index-maintenance integration tier (persistent IVF/PQ/BM25
 #     build-upsert-delete-stream cycles; ~25-90 s per test because each
 #     rebuilds parquet layouts repeatedly).

@@ -103,79 +103,3 @@ def test_ac_model_roundtrip(seed):
         out = [0] * 64
         AC.decode_ac(dec, dstats, dfixed, out, 5)
         assert out[1:] == blk[1:]
-
-
-@pytest.mark.parametrize("ss,se", [(6, 63), (2, 5), (33, 63)])
-def test_ac_model_roundtrip_spectral_band(ss, se):
-    # Progressive spectral-selection bands with ss>1: the all-zero
-    # band must code its EOB at context 3*(ss-1) — the r7 advisor
-    # found the encoder used 3*ke with ke=0, desynchronizing the
-    # adaptive contexts against the decoder.
-    rng = random.Random(ss * 100 + se)
-    blocks = [[0] * 64]  # all-zero band first: the trigger case
-    for _ in range(60):
-        blk = [0] * 64
-        for _ in range(rng.randrange(8)):
-            blk[rng.randrange(ss, se + 1)] = rng.randint(-100, 100)
-        blocks.append(blk)
-    blocks.append([0] * 64)
-
-    enc = AC.ArithEncoder()
-    stats = bytearray(AC.AC_STAT_BINS)
-    fixed = bytearray([AC.FIXED_BIN])
-    for blk in blocks:
-        AC.encode_ac(enc, stats, fixed, blk, 5, ss, se)
-    payload = enc.finish()
-
-    dec = AC.ArithDecoder(payload, 0)
-    dstats = bytearray(AC.AC_STAT_BINS)
-    dfixed = bytearray([AC.FIXED_BIN])
-    for blk in blocks:
-        out = [0] * 64
-        AC.decode_ac(dec, dstats, dfixed, out, 5, ss, se)
-        assert out == blk
-
-
-@pytest.mark.parametrize("ss,se", [(6, 63), (2, 5)])
-def test_ac_refine_roundtrip_spectral_band(ss, se):
-    # Same ss>1 EOB-context floor for the refinement model: bands that
-    # gain no new significant coefficient this scan must still agree
-    # on the trailing-EOB bin.
-    rng = random.Random(ss * 7 + se)
-    cases = []
-    for i in range(50):
-        full = [0] * 64
-        for _ in range(rng.randrange(6)):
-            full[rng.randrange(ss, se + 1)] = rng.randint(-64, 64)
-        if i == 0:
-            full = [0] * 64  # nothing significant at either resolution
-        cases.append(full)
-    al = 1
-
-    def prev_of(full):
-        # what the decoder holds after the al+1 scan
-        p = [0] * 64
-        for k in range(64):
-            hi = abs(full[k]) >> (al + 1)
-            if hi:
-                p[k] = (-hi if full[k] < 0 else hi) << (al + 1)
-        return p
-
-    enc = AC.ArithEncoder()
-    stats = bytearray(AC.AC_STAT_BINS)
-    fixed = bytearray([AC.FIXED_BIN])
-    for full in cases:
-        AC.encode_ac_refine(enc, stats, fixed, prev_of(full), full, ss, se, al)
-    payload = enc.finish()
-
-    dec = AC.ArithDecoder(payload, 0)
-    dstats = bytearray(AC.AC_STAT_BINS)
-    dfixed = bytearray([AC.FIXED_BIN])
-    for full in cases:
-        out = list(prev_of(full))
-        AC.decode_ac_refine(dec, dstats, dfixed, out, ss, se, al)
-        expect = [
-            ((-(abs(v) >> al) if v < 0 else (abs(v) >> al)) << al)
-            for v in full
-        ]
-        assert out[ss : se + 1] == expect[ss : se + 1]

@@ -49,13 +49,11 @@ _DECODERS = [
     MD.decode_image,
     MD.decode_png_pixels,
     MD.decode_jpeg_pixels,
-    MD.decode_gif_pixels,
     MD.decode_bmp_pixels,
     MD.decode_wav,
     MD.decode_wav_samples,
     MD.decode_audio,
     MD.decode_audio_samples,
-    MD.decode_mp3,
     MD.decode_image_pixels,
     MD.decode_mp4,
     MD.mp4_video_track,
@@ -90,9 +88,7 @@ def _valid_payloads():
     )
     from tests.test_minidecode import make_cid_pdf, make_encrypted_pdf, make_pdf, _CMAP
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.sources.mediaencode import (
-        encode_hierarchical_jpeg,
         encode_jpeg,
-        encode_lossless_jpeg,
     )
 
     import numpy as np
@@ -111,17 +107,6 @@ def _valid_payloads():
                     ycck=True),
         encode_jpeg(np.arange(192, dtype=np.uint8).reshape(8, 8, 3),
                     arithmetic=True, restart_interval=1),
-        encode_jpeg(np.arange(192, dtype=np.uint8).reshape(8, 8, 3),
-                    arithmetic=True, progressive=True),
-        encode_lossless_jpeg(np.arange(64, dtype=np.uint8).reshape(8, 8),
-                             predictor=4, restart_interval=30),
-        encode_lossless_jpeg(np.arange(64, dtype=np.uint8).reshape(8, 8),
-                             predictor=4, restart_interval=30,
-                             arithmetic=True),
-        encode_hierarchical_jpeg(np.arange(192, dtype=np.uint8).reshape(12, 16)),
-        encode_hierarchical_jpeg(
-            np.arange(576, dtype=np.uint8).reshape(12, 16, 3) % 251
-        ),
         make_wav()[0],
         make_mp4(),
         make_pdf([b"BT (hello) Tj ET"]),

@@ -32,31 +32,20 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
-    from pyspark.sql import SparkSession
+    # the event log must be configured before the JVM starts; get_spark
+    # builds the session with the engine's own settings on top
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true"
+        f" --conf spark.eventLog.dir=file://{evdir}"
+        " --conf spark.eventLog.compress=false "
+        + os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    )
 
     from ai_tutor_based_on_rag_using_lanchain_and_vectordb_spark.session import (
-        default_parallelism,
+        get_spark,
     )
 
-    cpus = default_parallelism()
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-bench")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", f"file://{evdir}")
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("profile-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     import bench
